@@ -697,12 +697,20 @@ object GeoExtent {
                   distance: Double = Double.NaN,
                   sizeDeg: Double = Double.NaN): Extent = {
     if (!distance.isNaN) {
-      val dLat = math.toDegrees(distance / EarthRadiusM) * 1.02
-      val cosLat = math.max(math.cos(math.toRadians(lat)), 1e-9)
-      val dLon = math.min(math.toDegrees(distance / (EarthRadiusM * cosLat)) * 1.02, 360.0)
-      Extent(
-        math.max(lon - dLon, -180), math.min(lon + dLon, 180),
-        math.max(lat - dLat, -90), math.min(lat + dLat, 90))
+      // exact bounding box of the spherical cap of angular radius δ: a cap
+      // reaching a pole spans every longitude, otherwise its half-width is
+      // asin(sin δ / cos lat). One Extent cannot wrap, so a box crossing
+      // ±180° widens to the full longitude span.
+      val delta = distance / EarthRadiusM
+      val dLat = math.toDegrees(delta) * 1.02
+      val dLon =
+        if (math.abs(lat) + dLat >= 90) 360.0
+        else math.toDegrees(math.asin(
+          math.sin(delta) / math.cos(math.toRadians(lat)))) * 1.02
+      val (xmin, xmax) =
+        if (lon - dLon < -180 || lon + dLon > 180) (-180.0, 180.0)
+        else (lon - dLon, lon + dLon)
+      Extent(xmin, xmax, math.max(lat - dLat, -90), math.min(lat + dLat, 90))
     } else {
       require(!sizeDeg.isNaN, "provide distance (m) or sizeDeg (degrees)")
       Extent(

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.operators.Similarity
 
@@ -30,12 +30,11 @@ import graft.operators.Similarity
   *    an inverted list. At 100 TB the codes frame is the only large one
   *    (~m bytes-ish per vector), and a probe touches nProbe/nList of it.
   *
-  * Batch appends follow the same generation-commit protocol as
-  * [[DedupIndex]]/[[TextIndex]]: each append writes into a NEW `gen=N`
-  * directory and an atomic manifest rename commits `n_gens = N+1`;
-  * readers filter committed generations, so a crashed append is
-  * invisible and the retry sweeps its debris instead of double-posting
-  * the batch. STREAM-managed codes (see [[streamingCodesWriter]]) use
+  * Batch appends, compaction and as-of loads follow the generation-
+  * commit protocol of [[GenerationalStore]] (a `gen=N` directory per
+  * append, one atomic manifest rename per commit); every batch mutator
+  * here takes the whole-dir claim, since [[IvfPqIndex.delete]] mutates
+  * in place. STREAM-managed codes (see [[streamingCodesWriter]]) use
   * the file-sink `_spark_metadata` log as their transaction mechanism
   * instead — flat `cell=C` layout, no generations; [[compactCodes]]
   * converts to the generational batch layout.
@@ -47,6 +46,9 @@ import graft.operators.Similarity
 object AnnIndex {
 
   val ManifestFile = "_ann_index.json"
+
+  private val Store = GenerationalStore(ManifestFile, "index_type", "ivf_pq",
+    Seq("codes"), "an ANN index")
 
   /** Liveness marker a running [[IvfPqIndex.delete]] holds through its
     * swap loop. Underscore prefix keeps it out of Spark's file index. */
@@ -75,38 +77,34 @@ object AnnIndex {
                               centroids: DataFrame, codebook: DataFrame,
                               codes: DataFrame, asOf: Boolean = false,
                               baseGen: Int = 0, asOfFence: Int = 0,
-                              codesSchema: Option[
-                                org.apache.spark.sql.types.StructType] = None) {
+                              codesSchema: Option[StructType] = None) {
 
-    /** The handle-local preconditions of the batch mutation verbs —
-      * everything EXCEPT the head re-check, which the generation-staging
-      * verbs must perform under the writer claim (the re-check is
-      * check-then-act; see [[GenerationLock]]). */
+    /** The handle-local preconditions of the batch mutation verbs (the
+      * head re-check runs under the writer claim). */
     private def requireBatchManagedLocal(verb: String): Unit = {
-      // a time-travel handle reads a historical prefix of the committed
-      // generations; letting it append/delete would fork history
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to mutate")
       // a stream-managed codes dir (file-sink _spark_metadata) reads ONLY
       // the files in the sink log — a batch write here would add rows
       // that are silently invisible; route new data through
       // streamingCodesWriter (or compact first)
       require(!BucketFs.exists(s"$indexDir/codes/_spark_metadata"),
         s"codes under $indexDir are stream-managed; $verb")
-      require(nGens >= 0,
-        s"codes under $indexDir use the pre-generational flat layout — " +
-          "rebuild the index (saveIvfPq) to enable batch mutation verbs")
+      GenerationalStore.requireMutable(indexDir, asOf, nGens, "mutate")
     }
 
-    private def requireFreshHead(): Unit = {
-      // a handle loaded before someone else's append would sweep THEIR
-      // committed generation as "debris" — refuse loudly instead
-      val live = readMeta(indexDir).nGens
-      require(live == nGens,
-        s"stale index handle: $indexDir has $live committed generations, " +
-          s"this handle was loaded at $nGens — chain the returned index")
-    }
+    private def meta = Meta(dims, m, k, nList, quantizeScale, idCol,
+      residual, trainUpdates, nGens, baseGen, asOfFence, codesSchema)
+
+    /** A batch mutation under the whole-dir claim ([[GenerationalStore
+      * .update]]): append-vs-delete must exclude too — their manifest
+      * writes would race last-writer-wins otherwise (an interleaved
+      * delete's as-of fence silently overwritten, un-fencing mutated
+      * history). */
+    private def update(spark: SparkSession, claimStaleness: Long,
+                       vacuum: Boolean = false)(stage: => Meta): IvfPqIndex =
+      Store.update(indexDir, nGens, claimStaleness,
+          _.requireHead(nGens, baseGen), wholeDir = true, vacuum = vacuum) {
+        _ => fields(stage)
+      }(loadIvfPq(spark, indexDir))
 
     /** Incremental ingest: encode `newCorpus` against the PERSISTED
       * centroids and codebook — nothing retrains, existing codes are
@@ -122,20 +120,7 @@ object AnnIndex {
                claimStaleness: Long =
                  GenerationLock.DefaultStalenessMs): IvfPqIndex = {
       requireBatchManagedLocal("use streamingCodesWriter")
-      // take the writer claim FIRST (shared [[GenerationLock]] protocol,
-      // same as TextIndex/DedupIndex), then re-check the head under it:
-      // the stale-handle check is check-then-act, so two sessions racing
-      // the same generation would both pass it and co-write one gen dir
-      // — silently double-posting codes. The WHOLE-DIR slot, not a
-      // per-generation one: this index also has an IN-PLACE mutator
-      // ([[delete]]), and append-vs-delete must exclude too — their
-      // manifest writes race last-writer-wins otherwise (an interleaved
-      // delete's as-of fence would be silently overwritten by this
-      // append's manifest, un-fencing mutated history).
-      val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-      try {
-        requireFreshHead()
-        BucketFs.dropGensAtOrAbove(s"$indexDir/codes", nGens)
+      update(newCorpus.sparkSession, claimStaleness) {
         val exploded = Similarity.encodeAgainstIndex(newCorpus, idCol, vecCol,
           centroids.select(col("cell").as("centroid_id"),
             col("centroid").as("__c")),
@@ -143,78 +128,37 @@ object AnnIndex {
             col("centroid").as("__c")),
           dims, m, k, nList, residual, quantizeScale,
           integerCb = trainUpdates == 0)
-        val written = writeCodes(exploded, idCol, indexDir, gen = nGens)
-        // ownership re-assert right before the commit point: a falsely
-        // stale-swept claim aborts here instead of co-committing
-        GenerationLock.verify(claim)
-        writeManifest(indexDir, residual, dims, m, k, nList, trainUpdates,
-          quantizeScale, idCol, nGens + 1, baseGen, asOfFence,
-          codesSchema = Some(written))
-        loadIvfPq(newCorpus.sparkSession, indexDir)
-      } finally GenerationLock.release(claim)
+        meta.copy(nGens = nGens + 1, codesSchema =
+          Some(writeCodes(exploded, idCol, indexDir, gen = nGens)))
+      }
     }
 
     /** Fold every committed code generation into ONE replacement
-      * generation — the batch-layout analogue of [[compactCodes]], and
-      * the same crash-safe shape as `TextIndex.compact` /
-      * `DedupIndex.compact`: the merged codes land in a NEW generation
-      * (`gen = nGens`), one atomic manifest rename commits
-      * `base_gen = nGens, n_gens = nGens + 1` (readers filter
-      * `base_gen <= gen < n_gens`, so there is NO unreadable window), and
-      * the unreferenced old generations are vacuumed after the commit. A handle loaded BEFORE the
-      * commit whose lazy scan races the vacuum fails LOUDLY
-      * (FILE_NOT_EXIST on the vacuumed generation) — never silently
-      * wrong; reload at head and retry.
-      * Search results are unchanged — code rows union verbatim; the
-      * frozen centroids/codebook don't move. As-of history renumbers at
-      * the compaction point.
-      *
-      * `vacuum = false` defers deleting the pre-compaction generations
-      * for reader grace (same knob as `TextIndex.compact`); retire them
-      * later with [[vacuumOldGens]] — only AFTER draining every reader
-      * that still holds a pre-compaction handle (an operator contract
-      * the engine cannot enforce; see README "Long-running readers
-      * (grace-window recipe)"). */
+      * generation — the batch-layout analogue of [[compactCodes]] and the
+      * compaction of [[GenerationalStore]]. Search results are unchanged
+      * — code rows union verbatim; the frozen centroids/codebook don't
+      * move. `vacuum = false` keeps the old generations for reader grace;
+      * retire them with [[vacuumOldGens]]. */
     def compactGens(claimStaleness: Long =
                       GenerationLock.DefaultStalenessMs,
                     vacuum: Boolean = true): IvfPqIndex = {
       requireBatchManagedLocal("compact the stream layout with compactCodes")
-      // same writer-claim serialization as append (whole-dir slot: all
-      // three batch mutators of this index exclude each other)
-      val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-      try {
-        requireFreshHead()
-        val spark = codes.sparkSession
-        BucketFs.dropGensAtOrAbove(s"$indexDir/codes", nGens)
+      update(codes.sparkSession, claimStaleness, vacuum) {
         val folded = codes.withColumn("gen", lit(nGens))
         folded.write.mode("append").partitionBy("gen", "cell")
           .parquet(s"$indexDir/codes")
-        GenerationLock.verify(claim)
         // schema recomputed from the frame just written — identical for
         // an r21 handle, and upgrades a pre-r21 manifest on compaction
-        writeManifest(indexDir, residual, dims, m, k, nList, trainUpdates,
-          quantizeScale, idCol, nGens + 1, baseGen = nGens,
-          asOfFence = asOfFence,
-          codesSchema = Some(ReadBackSchema.of(folded.schema,
-            Seq("gen", "cell"))))
-        if (vacuum) BucketFs.dropGensBelow(s"$indexDir/codes", nGens)
-        loadIvfPq(spark, indexDir)
-      } finally GenerationLock.release(claim)
+        meta.copy(nGens = nGens + 1, baseGen = nGens, codesSchema =
+          Some(ReadBackSchema.of(folded.schema, Seq("gen", "cell"))))
+      }
     }
 
-    /** Retire generations a `compactGens(vacuum = false)` superseded:
-      * delete every code generation below the LIVE manifest's
-      * `base_gen`. Claimless, idempotent, and safe against every mutator
-      * — see `TextIndex.vacuumOldGens` for the argument. */
-    def vacuumOldGens(): IvfPqIndex = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to vacuum")
-      val spark = codes.sparkSession
-      val liveBase = readMeta(indexDir).baseGen
-      BucketFs.dropGensBelow(s"$indexDir/codes", liveBase)
-      loadIvfPq(spark, indexDir)
-    }
+    /** Retire generations a `compactGens(vacuum = false)` superseded
+      * ([[GenerationalStore.vacuum]]). */
+    def vacuumOldGens(): IvfPqIndex =
+      Store.vacuum(indexDir, asOf)(loadIvfPq(codes.sparkSession, indexDir))
+
     /** Delete vectors by id — the remaining lifecycle verb after
       * save/load/search/append/stream-ingest. Rewrites ONLY the cell
       * directories that actually hold a deleted id (found by one pruned
@@ -255,9 +199,8 @@ object AnnIndex {
       // fields last-writer-wins. The delete MARKER below stays distinct:
       // the claim is writer-vs-writer mutual exclusion, the marker is
       // writer-vs-READER liveness (repair guards adjudicate on it).
-      val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-      try {
-      requireFreshHead()
+      Store.claimed(indexDir, None, claimStaleness) { claim =>
+      Store.read(indexDir).requireHead(nGens, baseGen)
       val spark = codes.sparkSession
       // the raw read keeps `gen`: deleted ids may live in any committed
       // generation, and the rewrite must land back in the SAME one.
@@ -344,10 +287,7 @@ object AnnIndex {
           // a falsely stale-swept claim aborts before the first in-place
           // mutation, with only the marker written (harmless: it goes
           // stale and readers resume).
-          GenerationLock.verify(claim)
-          writeManifest(indexDir, residual, dims, m, k, nList, trainUpdates,
-            quantizeScale, idCol, nGens, baseGen, asOfFence = nGens,
-            codesSchema = codesSchema) // layout untouched: carry through
+          Store.commit(claim, indexDir, fields(meta.copy(asOfFence = nGens)))
           BucketFs.deleteRecursive(tmp)
           val pairs = affected.map { case (g, c) =>
             col("gen") === g && col("cell") === c }.reduce(_ || _)
@@ -393,7 +333,7 @@ object AnnIndex {
         BucketFs.deleteRecursive(markerPath)
       }
       loadIvfPq(spark, indexDir)
-      } finally GenerationLock.release(claim)
+      }
     }
 
     /** Top-k ADC search against the persisted index; identical results to
@@ -455,62 +395,45 @@ object AnnIndex {
     // this index's append/delete/compact/repair, so a save also excludes
     // every in-flight mutation (and vice versa) — on this artifact the
     // exclusion is total, not just save-vs-save.
-    val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-    try {
-    // the old manifest goes first — a crash anywhere in this rewrite must
-    // fail to load loudly, never serve stale parameters over mixed data
-    BucketFs.deleteRecursive(s"$indexDir/$ManifestFile")
-    val (centroids, codebook, codesExploded) =
-      if (residual) Similarity.ivfPqResidualIndexExploded(
-        corpus, idCol, vecCol, dims, m, k, nList, quantizeScale, trainUpdates)
-      else Similarity.ivfPqIndexExploded(
-        corpus, idCol, vecCol, dims, m, k, nList, quantizeScale, trainUpdates)
-    // tiny frames: one file each, not 32 shards of a few rows
-    centroids.select(col("centroid_id").as("cell"), col("__c").as("centroid"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    codebook.select(col("__s").as("subspace"), col("__cid").as("code_id"),
-        col("__c").as("centroid"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    // codes pack to one array row per vector (position = subspace) and
-    // land in generation 0 of the gen/cell layout searches prune on;
-    // n_gens = 0 marks a codes-free build (stream-managed codes never
-    // use generations — their sink log is the transaction mechanism)
-    BucketFs.deleteRecursive(s"$indexDir/codes")
-    val codesSchema =
-      if (includeCodes) Some(writeCodes(codesExploded, idCol, indexDir, gen = 0))
-      else None
-    // ownership re-assert right before the commit point (manifest write)
-    GenerationLock.verify(claim)
-    writeManifest(indexDir, residual, dims, m, k, nList, trainUpdates,
-      quantizeScale, idCol, if (includeCodes) 1 else 0,
-      codesSchema = codesSchema)
-    } finally GenerationLock.release(claim)
+    Store.save(indexDir, claimStaleness) {
+      val (centroids, codebook, codesExploded) =
+        if (residual) Similarity.ivfPqResidualIndexExploded(
+          corpus, idCol, vecCol, dims, m, k, nList, quantizeScale, trainUpdates)
+        else Similarity.ivfPqIndexExploded(
+          corpus, idCol, vecCol, dims, m, k, nList, quantizeScale, trainUpdates)
+      // tiny frames: one file each, not 32 shards of a few rows
+      centroids.select(col("centroid_id").as("cell"), col("__c").as("centroid"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+      codebook.select(col("__s").as("subspace"), col("__cid").as("code_id"),
+          col("__c").as("centroid"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
+      // codes pack to one array row per vector (position = subspace) and
+      // land in generation 0 of the gen/cell layout searches prune on;
+      // n_gens = 0 marks a codes-free build (stream-managed codes never
+      // use generations — their sink log is the transaction mechanism)
+      fields(Meta(dims, m, k, nList, quantizeScale, idCol, residual,
+        trainUpdates, if (includeCodes) 1 else 0, 0, 0,
+        if (includeCodes) Some(writeCodes(codesExploded, idCol, indexDir, gen = 0))
+        else None))
+    }
   }
 
-  private def writeManifest(indexDir: String, residual: Boolean, dims: Int,
-                            m: Int, k: Int, nList: Int, trainUpdates: Int,
-                            quantizeScale: Option[Double], idCol: String,
-                            nGens: Int, baseGen: Int = 0,
-                            asOfFence: Int = 0,
-                            codesSchema: Option[
-                              org.apache.spark.sql.types.StructType] = None)
-      : Unit = {
-    val manifest: Map[String, Any] = Map(
-      "index_type" -> "ivf_pq", "residual" -> residual,
-      "dims" -> dims, "m" -> m, "k" -> k, "n_list" -> nList,
-      "train_updates" -> trainUpdates,
-      "quantize_scale" -> quantizeScale.map(_.asInstanceOf[Any]).orNull,
-      "id_col" -> idCol, "n_gens" -> nGens, "base_gen" -> baseGen,
-      "as_of_fence" -> asOfFence) ++
+  /** Manifest fields of `mt` (key order as the map iterates — the
+    * on-disk format since the first ANN manifest). */
+  private def fields(mt: Meta): List[(String, JValue)] =
+    (Map[String, JValue](
+      "index_type" -> JString("ivf_pq"), "residual" -> JBool(mt.residual),
+      "dims" -> JInt(mt.dims), "m" -> JInt(mt.m), "k" -> JInt(mt.k),
+      "n_list" -> JInt(mt.nList), "train_updates" -> JInt(mt.trainUpdates),
+      "quantize_scale" -> mt.scale.fold[JValue](JNull)(JDouble(_)),
+      "id_col" -> JString(mt.idCol), "n_gens" -> JInt(mt.nGens),
+      "base_gen" -> JInt(mt.baseGen), "as_of_fence" -> JInt(mt.asOfFence)) ++
       // read-back schema of the batch-managed generational codes layout
       // (r21): loads pass it instead of paying listing+footer inference
       // per resolution; absent on pre-r21 manifests and stream-managed
       // codes (their sink-log read keeps inference)
-      codesSchema.map(s => "codes_schema" ->
-        (ReadBackSchema.toJsonString(s): Any)).toMap
-    BucketFs.writeStringAtomic(s"$indexDir/$ManifestFile",
-      JsonMethods.pretty(JsonMethods.render(toJValue(manifest))))
-  }
+      mt.codesSchema.map(s =>
+        "codes_schema" -> JString(ReadBackSchema.toJsonString(s)))).toList
 
   /** STREAMING codes ingest: a file-source stream of corpus rows is PQ-
     * encoded map-only against the index's persisted centroids + codebook
@@ -592,11 +515,9 @@ object AnnIndex {
     BucketFs.move(fs, src, dst)
     BucketFs.deleteRecursive(old)
     // the handoff commit: codes are now generation 0 of the batch layout
-    val mt = readMeta(indexDir)
-    writeManifest(indexDir, mt.residual, mt.dims, mt.m, mt.k, mt.nList,
-      mt.trainUpdates, mt.scale, mt.idCol, 1,
-      codesSchema = Some(ReadBackSchema.of(handedOff.schema,
-        Seq("gen", "cell"))))
+    Store.write(indexDir, fields(readMeta(indexDir).copy(nGens = 1,
+      baseGen = 0, asOfFence = 0, codesSchema =
+        Some(ReadBackSchema.of(handedOff.schema, Seq("gen", "cell"))))))
   }
 
   /** Pack exploded codes to one array row per vector (position =
@@ -626,75 +547,21 @@ object AnnIndex {
                                 scale: Option[Double], idCol: String,
                                 residual: Boolean, trainUpdates: Int,
                                 nGens: Int, baseGen: Int, asOfFence: Int,
-                                codesSchema: Option[
-                                  org.apache.spark.sql.types.StructType])
+                                codesSchema: Option[StructType])
 
-  private def readMeta(indexDir: String): Meta = {
-    val p = s"$indexDir/$ManifestFile"
-    if (!BucketFs.exists(p))
-      throw new IllegalArgumentException(
-        s"no $ManifestFile in $indexDir — not an ANN index?")
-    val mf = JsonMethods.parse(BucketFs.readString(p))
-    def num(field: String): Double = mf \ field match {
-      case JInt(x) => x.toDouble
-      case JDouble(x) => x
-      case JLong(x) => x.toDouble
-      case other => throw new IllegalArgumentException(
-        s"manifest field '$field' missing or non-numeric: $other")
-    }
-    val idxType = mf \ "index_type" match { case JString(s) => s; case _ => "?" }
-    require(idxType == "ivf_pq", s"unsupported index_type '$idxType'")
-    val scale = mf \ "quantize_scale" match {
-      case JNull | JNothing => None
-      case JDouble(x) => Some(x)
-      case JInt(x) => Some(x.toDouble)
-      case other => throw new IllegalArgumentException(
-        s"bad quantize_scale in manifest: $other")
-    }
-    val idCol = mf \ "id_col" match {
-      case JString(s) => s
-      case _ => throw new IllegalArgumentException("manifest missing id_col")
-    }
-    val residual = mf \ "residual" match {
-      case JBool(b) => b
-      case JNothing | JNull => false // pre-residual manifests
-      case other => throw new IllegalArgumentException(
-        s"bad residual flag in manifest: $other")
-    }
-    val trainUpdates = mf \ "train_updates" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => 0 // pre-trainUpdates manifests
-      case other => throw new IllegalArgumentException(
-        s"bad train_updates in manifest: $other")
-    }
-    val nGens = mf \ "n_gens" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => -1 // pre-generational flat codes layout
-      case other => throw new IllegalArgumentException(
-        s"bad n_gens in manifest: $other")
-    }
-    val baseGen = mf \ "base_gen" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => 0 // pre-compaction manifests: base is 0
-      case other => throw new IllegalArgumentException(
-        s"bad base_gen in manifest: $other")
-    }
-    val asOfFence = mf \ "as_of_fence" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => 0 // no in-place mutation recorded
-      case other => throw new IllegalArgumentException(
-        s"bad as_of_fence in manifest: $other")
-    }
-    // read-back schema of the batch codes layout (r21): absent on
-    // pre-r21 manifests → loads fall back to footer inference
-    val codesSchema = mf \ "codes_schema" match {
-      case JString(s) => Some(ReadBackSchema.fromJsonString(s))
-      case _ => None
-    }
-    Meta(num("dims").toInt, num("m").toInt, num("k").toInt,
-      num("n_list").toInt, scale, idCol, residual, trainUpdates, nGens,
-      baseGen, asOfFence, codesSchema)
-  }
+  private def metaOf(m: GenerationalStore.Manifest): Meta =
+    Meta(m.int("dims"), m.int("m"), m.int("k"), m.int("n_list"),
+      m.orElse("quantize_scale", Option.empty[Double]) {
+        case JDouble(x) => Some(x)
+        case JInt(x) => Some(x.toDouble)
+      }, m.str("id_col"),
+      m.orElse("residual", false) { case JBool(b) => b }, // pre-residual
+      m.intOr("train_updates", 0), m.nGens, m.baseGen,
+      m.intOr("as_of_fence", 0), // no in-place mutation recorded
+      // absent on pre-r21 manifests → loads fall back to footer inference
+      m.schema("codes_schema"))
+
+  private def readMeta(indexDir: String): Meta = metaOf(Store.read(indexDir))
 
   /** Reload a persisted IVF-PQ index (manifest + lazy parquet frames).
     *
@@ -830,103 +697,59 @@ object AnnIndex {
     // double-moving directories. force = true waives the claim
     // staleness too (operator asserts the writer is dead — same
     // contract the marker-guard waiver always carried).
-    val claim = GenerationLock.claimDir(indexDir,
-      if (force) 0L else stalenessMs)
-    try {
+    Store.claimed(indexDir, None, if (force) 0L else stalenessMs) { claim =>
       // re-scan UNDER the claim: the world may have moved between the
       // first listing and the claim (a writer may have completed and
       // cleaned up, or crashed leaving different debris)
       val d = scan()
-      if (d.clean) return
-      markerGuard(d)
-      d.asides.foreach { st =>
-        val sub = st.getPath.getName.stripPrefix("codes_old_")
-          .replaceFirst("_cell=", "/cell=") // gen=G/cell=C
-        val live = new org.apache.hadoop.fs.Path(root, s"codes/$sub")
-        val tmp = new org.apache.hadoop.fs.Path(root, s"codes_rewrite_tmp/$sub")
-        if (!fs.exists(live) && fs.exists(tmp)) {
-          BucketFs.mkdirs(fs, live.getParent)
-          BucketFs.move(fs, tmp, live)
+      if (!d.clean) {
+        markerGuard(d)
+        d.asides.foreach { st =>
+          val sub = st.getPath.getName.stripPrefix("codes_old_")
+            .replaceFirst("_cell=", "/cell=") // gen=G/cell=C
+          val live = new org.apache.hadoop.fs.Path(root, s"codes/$sub")
+          val tmp = new org.apache.hadoop.fs.Path(root, s"codes_rewrite_tmp/$sub")
+          if (!fs.exists(live) && fs.exists(tmp)) {
+            BucketFs.mkdirs(fs, live.getParent)
+            BucketFs.move(fs, tmp, live)
+          }
+          fs.delete(st.getPath, true)
         }
-        fs.delete(st.getPath, true)
+        BucketFs.deleteRecursive(s"$indexDir/codes_rewrite_tmp")
+        BucketFs.deleteRecursive(s"$indexDir/$DeleteMarkerFile")
+        val mt = readMeta(indexDir)
+        Store.commit(claim, indexDir, fields(mt.copy(asOfFence = mt.nGens)))
       }
-      BucketFs.deleteRecursive(s"$indexDir/codes_rewrite_tmp")
-      BucketFs.deleteRecursive(s"$indexDir/$DeleteMarkerFile")
-      val mt = readMeta(indexDir)
-      // ownership re-assert before the manifest write — the same
-      // pre-commit pattern every claimed mutator follows
-      GenerationLock.verify(claim)
-      writeManifest(indexDir, mt.residual, mt.dims, mt.m, mt.k, mt.nList,
-        mt.trainUpdates, mt.scale, mt.idCol, mt.nGens, mt.baseGen,
-        asOfFence = mt.nGens, codesSchema = mt.codesSchema)
-    } finally GenerationLock.release(claim)
+    }
   }
 
   def loadIvfPq(spark: SparkSession, indexDir: String,
                 asOfGen: Int = -1,
                 repairStaleness: Long = DefaultRepairStalenessMs): IvfPqIndex = {
     repairDeleteAsides(indexDir, stalenessMs = repairStaleness)
-    val mt = readMeta(indexDir)
+    val manifest = Store.read(indexDir)
+    val mt = metaOf(manifest)
     val streamManaged = BucketFs.exists(s"$indexDir/codes/_spark_metadata")
-    val effGens =
-      if (asOfGen >= 0) {
-        require(mt.nGens >= 0 && !streamManaged,
-          s"as-of reads need the generational batch codes layout: $indexDir")
-        require(asOfGen <= mt.nGens,
-          s"as-of generation $asOfGen is ahead of the ${mt.nGens} committed " +
-            s"generations in $indexDir")
-        // strict: the physical gen at `baseGen` holds the FOLDED prefix
-        // (earliest reachable state is baseGen + 1 = the pre-compaction
-        // head; older points renumber +1 per compaction)
-        require(asOfGen > mt.baseGen,
-          s"as-of generation $asOfGen is at or before the compaction " +
-            s"base ${mt.baseGen} in $indexDir — that history has been " +
-            "folded away")
-        // delete() rewrites code rows INSIDE historical generations, so
-        // every state older than the delete point would read back
-        // subtly wrong (missing the tombstoned ids) — refuse instead
-        require(asOfGen >= mt.asOfFence,
-          s"as-of generation $asOfGen predates an in-place delete " +
-            s"(fence ${mt.asOfFence}) in $indexDir — that history was " +
-            "mutated and is no longer exact")
-        asOfGen
-      } else mt.nGens
+    // delete() rewrites code rows INSIDE historical generations, so
+    // every state older than the delete point would read back subtly
+    // wrong (missing the tombstoned ids) — the fence refuses them
+    val effGens = manifest.asOf(asOfGen, generational = !streamManaged,
+      fence = mt.asOfFence)
     // cell is a directory-partition column: its read-back type depends on
     // session inference settings (string with inference off), so pin it.
     // Stream-managed codes read through the sink log (flat layout, the
-    // log IS the commit filter); batch codes filter committed generations.
-    // Batch-managed generational codes with a manifest-persisted schema
-    // (r21) skip the eager listing+footer inference — ~100 ms per
-    // resolution on a generation-partitioned dir (ResolveBench), paid on
-    // every load otherwise
+    // log IS the commit filter); batch codes filter committed generations
+    // with the manifest-persisted schema (r21)
     val schemaFastPath =
       if (mt.nGens >= 0 && !streamManaged) mt.codesSchema else None
-    val raw = schemaFastPath.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(s"$indexDir/codes")
-    val codes =
-      (if (mt.nGens >= 0 && !streamManaged)
-         raw.where(col("gen") >= lit(mt.baseGen) && col("gen") < lit(effGens))
-           .drop("gen")
-       else raw)
-        .withColumn("cell", col("cell").cast("long"))
+    val codes = GenerationalStore.committed(spark, indexDir, "codes",
+        if (streamManaged) -1 else effGens, mt.baseGen, schemaFastPath)
+      .withColumn("cell", col("cell").cast("long"))
     IvfPqIndex(mt.dims, mt.m, mt.k, mt.nList, mt.scale, mt.idCol,
       mt.residual, mt.trainUpdates, effGens, indexDir,
       spark.read.parquet(s"$indexDir/centroids"),
       spark.read.parquet(s"$indexDir/codebook"), codes,
       asOf = asOfGen >= 0, baseGen = mt.baseGen, asOfFence = mt.asOfFence,
       codesSchema = schemaFastPath)
-  }
-
-  private def toJValue(v: Any): JValue = v match {
-    case null => JNull
-    case s: String => JString(s)
-    case i: Int => JInt(i)
-    case l: Long => JInt(l)
-    case d: Double => JDouble(d)
-    case b: Boolean => JBool(b)
-    case s: Seq[_] => JArray(s.map(toJValue).toList)
-    case m: Map[_, _] =>
-      JObject(m.map { case (k, vv) => k.toString -> toJValue(vv) }.toList)
-    case other => JString(other.toString)
   }
 }

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.operators.Dedup
 
@@ -42,6 +42,9 @@ object DedupIndex {
 
   val ManifestFile = "_dedup_index.json"
 
+  private val Store = GenerationalStore(ManifestFile, "index_type",
+    "minhash_lsh", Seq("bands", "signatures", "bucket_stats"), "a dedup index")
+
   /** Pack mh0..mh{n-1} signature columns into one array column. */
   private def packedSig(numHashes: Int) =
     array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig")
@@ -52,8 +55,7 @@ object DedupIndex {
     * [[ReadBackSchema]], r21). */
   private def writeGen(sigs: DataFrame, banded: DataFrame, idCol: String,
                        numHashes: Int, indexDir: String, gen: Int)
-      : (org.apache.spark.sql.types.StructType,
-         org.apache.spark.sql.types.StructType) = {
+      : (StructType, StructType) = {
     val b = banded.withColumn("gen", lit(gen))
     b.write.mode("append").partitionBy("gen", "band")
       .parquet(s"$indexDir/bands")
@@ -65,295 +67,135 @@ object DedupIndex {
       ReadBackSchema.of(sg.schema, Seq("gen")))
   }
 
-  private def writeManifest(indexDir: String, shingleK: Int, numHashes: Int,
-                            bands: Int, nGens: Int, idCol: String,
-                            baseGen: Int = 0,
-                            schemas: Map[String,
-                              org.apache.spark.sql.types.StructType] =
-                                Map.empty): Unit = {
-    val base = List(
-      "index_type" -> JString("minhash_lsh"), "shingle_k" -> JInt(shingleK),
-      "num_hashes" -> JInt(numHashes), "bands" -> JInt(bands),
-      "n_gens" -> JInt(nGens), "base_gen" -> JInt(baseGen),
-      "id_col" -> JString(idCol))
-    val withSchemas =
-      if (schemas.isEmpty) base
-      else base :+ ("schemas" -> JObject(schemas.toList.sortBy(_._1).map {
-        case (k, v) => k -> (JString(ReadBackSchema.toJsonString(v)): JValue)
-      }))
-    val j: JValue = JObject(withSchemas)
-    BucketFs.writeStringAtomic(s"$indexDir/$ManifestFile",
-      JsonMethods.pretty(JsonMethods.render(j)))
-  }
+  private def manifest(shingleK: Int, numHashes: Int, bands: Int,
+                       nGens: Int, idCol: String, baseGen: Int,
+                       schemas: Map[String, StructType])
+      : List[(String, JValue)] = List(
+    "index_type" -> JString("minhash_lsh"), "shingle_k" -> JInt(shingleK),
+    "num_hashes" -> JInt(numHashes), "bands" -> JInt(bands),
+    "n_gens" -> JInt(nGens), "base_gen" -> JInt(baseGen),
+    "id_col" -> JString(idCol)) ++ GenerationalStore.schemasField(schemas)
 
-  /** Build and persist the index over `corpus`. Overwrites `indexDir`.
-    * All three datasets land in generation 0; the (atomic) manifest
-    * write commits the build — see the commit protocol on [[MinHashIndex
-    * .append]].
-    *
-    * PROVISIONING is a mutation too (round 17): [[writeGen]] appends
-    * into the generation directories, so two schedulers retrying one
-    * build job would co-write generation 0 and the surviving manifest
-    * would silently serve BOTH writers' rows — the same co-mingle shape
-    * the append/compact claims close. The whole-dir claim
-    * ([[GenerationLock.claimDir]]) serializes saves against each other;
-    * save-vs-APPEND stays an operator-coordinated destructive rebuild
-    * (appends hold per-generation slots), unchanged contract. */
+  /** Build and persist the index over `corpus`. Overwrites `indexDir`:
+    * all three datasets land in generation 0 under the provisioning
+    * save of [[GenerationalStore]] (whole-dir claim, so two schedulers
+    * retrying one build cannot co-write generation 0; save-vs-APPEND
+    * stays an operator-coordinated destructive rebuild). */
   def save(corpus: DataFrame, textCol: String, idCol: String, indexDir: String,
            shingleK: Int = 3, numHashes: Int = 8, bands: Int = 4,
            claimStaleness: Long = GenerationLock.DefaultStalenessMs): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-    try {
-    // save overwrites: the OLD MANIFEST goes first, so a crash mid-save
-    // leaves an index that fails to load LOUDLY instead of one whose
-    // stale manifest silently mis-reads the new data; then clear
-    // previous data (writeGen appends into generation dirs, so stale
-    // files would otherwise merge in)
-    BucketFs.deleteRecursive(s"$indexDir/$ManifestFile")
-    Seq("bands", "signatures", "bucket_stats").foreach(sub =>
-      BucketFs.deleteRecursive(s"$indexDir/$sub"))
-    val sigs = Dedup.minHashSignature(corpus, textCol, idCol, shingleK, numHashes)
-    val banded = Dedup.lshBands(sigs, idCol, numHashes, bands)
-    val (bandsSchema, sigsSchema) =
-      writeGen(sigs, banded, idCol, numHashes, indexDir, gen = 0)
-    // stats from the WRITTEN postings (not a recompute) — guarantees the
-    // counts and the band files can never disagree
-    val spark = corpus.sparkSession
-    val stats = bandsOf(spark, indexDir, maxGen = 1, schema = Some(bandsSchema))
-      .groupBy("band", "band_sig")
-      .agg(count(lit(1)).as("n"), min(col(idCol)).as("rep_id"))
-      .withColumn("gen", lit(0))
-    stats.write.mode("append").partitionBy("gen")
-      .parquet(s"$indexDir/bucket_stats")
-    // ownership re-assert right before the commit point (manifest write)
-    GenerationLock.verify(claim)
-    writeManifest(indexDir, shingleK, numHashes, bands, 1, idCol,
-      schemas = Map(
+    Store.save(indexDir, claimStaleness) {
+      val sigs = Dedup.minHashSignature(corpus, textCol, idCol, shingleK, numHashes)
+      val banded = Dedup.lshBands(sigs, idCol, numHashes, bands)
+      val (bandsSchema, sigsSchema) =
+        writeGen(sigs, banded, idCol, numHashes, indexDir, gen = 0)
+      // stats from the WRITTEN postings (not a recompute) — guarantees the
+      // counts and the band files can never disagree
+      val stats = bandsOf(corpus.sparkSession, indexDir, nGens = 1,
+        schema = Some(bandsSchema))
+        .groupBy("band", "band_sig")
+        .agg(count(lit(1)).as("n"), min(col(idCol)).as("rep_id"))
+        .withColumn("gen", lit(0))
+      stats.write.mode("append").partitionBy("gen")
+        .parquet(s"$indexDir/bucket_stats")
+      manifest(shingleK, numHashes, bands, 1, idCol, 0, Map(
         "bands" -> bandsSchema, "signatures" -> sigsSchema,
         "bucket_stats" -> ReadBackSchema.of(stats.schema, Seq("gen"))))
-    } finally GenerationLock.release(claim)
+    }
   }
 
-  // band/gen are directory-partition columns: pin band's read-back type,
-  // keep only committed generations, hide the bookkeeping column. A
-  // pre-generational index (maxGen < 0, flat layout) reads as-is.
-  // `schema`: the manifest-persisted read-back schema (skips footer
-  // inference); None falls back to plain inference (pre-r21 manifests).
+  // band is a directory-partition column: pin its read-back type
   private def bandsOf(spark: SparkSession, indexDir: String,
-                      maxGen: Int, baseGen: Int = 0,
-                      schema: Option[org.apache.spark.sql.types.StructType] =
-                        None): DataFrame = {
-    val raw = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(s"$indexDir/bands")
-    (if (maxGen < 0) raw
-     else raw.where(col("gen") >= lit(baseGen) && col("gen") < lit(maxGen))
-       .drop("gen"))
-      .withColumn("band", col("band").cast("int"))
-  }
+                      nGens: Int, baseGen: Int = 0,
+                      schema: Option[StructType]): DataFrame =
+    GenerationalStore.committed(spark, indexDir, "bands", nGens, baseGen,
+      schema).withColumn("band", col("band").cast("int"))
 
   /** Reload a persisted dedup index (manifest + lazy parquet frames).
     *
     * `asOfGen >= 0` is a TIME-TRAVEL read: bands/signatures pin to
     * generations `< asOfGen` and bucket_stats to the stats snapshot that
     * generation committed — the exact index state after the asOfGen-th
-    * batch, with the newer generation directories pruned at the
-    * partition-filter level. Exact by construction (appends only add
-    * generations; nothing is rewritten). As-of handles are read-only. */
+    * batch (see [[GenerationalStore]]). As-of handles are read-only. */
   def load(spark: SparkSession, indexDir: String,
            asOfGen: Int = -1): MinHashIndex = {
-    val p = s"$indexDir/$ManifestFile"
-    if (!BucketFs.exists(p))
-      throw new IllegalArgumentException(
-        s"no $ManifestFile in $indexDir — not a dedup index?")
-    val mf = JsonMethods.parse(BucketFs.readString(p))
-    def int(field: String): Int = mf \ field match {
-      case JInt(x) => x.toInt
-      case other => throw new IllegalArgumentException(
-        s"manifest field '$field' missing or non-integer: $other")
-    }
-    val idxType = mf \ "index_type" match { case JString(s) => s; case _ => "?" }
-    require(idxType == "minhash_lsh", s"unsupported index_type '$idxType'")
-    val idCol = mf \ "id_col" match {
-      case JString(s) => s
-      case _ => throw new IllegalArgumentException("manifest missing id_col")
-    }
-    // missing n_gens = a pre-generational index: loadable read-only
-    val nGens = mf \ "n_gens" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => -1
-      case other => throw new IllegalArgumentException(
-        s"bad n_gens in manifest: $other")
-    }
-    val baseGen = mf \ "base_gen" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => 0 // pre-compaction manifests: base is 0
-      case other => throw new IllegalArgumentException(
-        s"bad base_gen in manifest: $other")
-    }
-    val effGens =
-      if (asOfGen >= 0) {
-        require(nGens >= 0,
-          s"as-of reads need the generational layout: $indexDir")
-        require(asOfGen <= nGens,
-          s"as-of generation $asOfGen is ahead of the $nGens committed " +
-            s"generations in $indexDir")
-        // strict: the physical gen at `baseGen` holds the FOLDED prefix
-        // (earliest reachable state is baseGen + 1 = the pre-compaction
-        // head; older points renumber +1 per compaction)
-        require(asOfGen > baseGen,
-          s"as-of generation $asOfGen is at or before the compaction " +
-            s"base $baseGen in $indexDir — that history has been folded away")
-        asOfGen
-      } else nGens
-    // manifest-persisted read-back schemas (r21): present on indexes
-    // written at or after this round; absent → loaders fall back to
-    // plain footer inference (pre-r21 indexes keep working unchanged)
-    val schemas: Map[String, org.apache.spark.sql.types.StructType] =
-      mf \ "schemas" match {
-        case JObject(fields) => fields.collect {
-          case (k, JString(v)) => k -> ReadBackSchema.fromJsonString(v)
-        }.toMap
-        case _ => Map.empty
-      }
-    MinHashIndex(spark, indexDir, int("shingle_k"), int("num_hashes"),
-      int("bands"), effGens, idCol, asOf = asOfGen >= 0, baseGen = baseGen,
-      schemas = schemas)
+    val m = Store.read(indexDir)
+    MinHashIndex(spark, indexDir, m.int("shingle_k"), m.int("num_hashes"),
+      m.int("bands"), m.asOf(asOfGen), m.str("id_col"), asOf = asOfGen >= 0,
+      baseGen = m.baseGen, schemas = m.schemas)
   }
 
   final case class MinHashIndex(spark: SparkSession, indexDir: String,
                                 shingleK: Int, numHashes: Int, bands: Int,
                                 nGens: Int, idCol: String,
                                 asOf: Boolean = false, baseGen: Int = 0,
-                                schemas: Map[String,
-                                  org.apache.spark.sql.types.StructType] =
-                                    Map.empty) {
+                                schemas: Map[String, StructType] = Map.empty) {
 
     // explicit-schema reads skip the eager listing+footer inference that
     // spark.read.parquet pays per RESOLUTION (~100 ms vs ~18 ms on the
     // bench host, ResolveBench) — the ingest path re-loads this index
     // every micro-batch, so the tax compounded (r21)
-    private def readSub(sub: String): org.apache.spark.sql.DataFrameReader =
-      schemas.get(sub).map(spark.read.schema(_)).getOrElse(spark.read)
+    private def committed(sub: String): DataFrame =
+      GenerationalStore.committed(spark, indexDir, sub, nGens, baseGen,
+        schemas.get(sub))
 
     def bandPostings: DataFrame =
       bandsOf(spark, indexDir, nGens, baseGen, schema = schemas.get("bands"))
-    def signatures: DataFrame = {
-      val raw = readSub("signatures").parquet(s"$indexDir/signatures")
-      if (nGens < 0) raw
-      else raw.where(col("gen") >= lit(baseGen) && col("gen") < lit(nGens))
-        .drop("gen")
-    }
+    def signatures: DataFrame = committed("signatures")
     /** Bucket stats are a REPLACEMENT dataset: each committed append
       * writes the full merged copy into its generation, and only the
       * NEWEST committed generation is live. */
-    def bucketStats: DataFrame = {
-      val raw = readSub("bucket_stats").parquet(s"$indexDir/bucket_stats")
-      if (nGens < 0) raw
-      else raw.where(col("gen") === lit(nGens - 1)).drop("gen")
-    }
+    def bucketStats: DataFrame =
+      GenerationalStore.committed(spark, indexDir, "bucket_stats", nGens,
+        nGens - 1, schemas.get("bucket_stats"))
+
+    private def fields(nGens: Int, baseGen: Int,
+                       schemas: Map[String, StructType]) =
+      manifest(shingleK, numHashes, bands, nGens, idCol, baseGen, schemas)
 
     /** Fold every committed generation into ONE replacement generation —
-      * the operational answer to generation sprawl on a long-appended
-      * index. Same crash-safe shape as [[TextIndex]]: the merged
-      * bands/signatures (and the live bucket-stats snapshot) land in a
-      * NEW generation (`gen = nGens`), one atomic manifest rename commits
-      * `base_gen = nGens, n_gens = nGens + 1` (readers filter
-      * `base_gen <= gen < n_gens`, so there is NO unreadable window), and
-      * the now-unreferenced old generations are vacuumed after the
-      * commit. A handle loaded BEFORE the
-      * commit whose lazy scan races the vacuum fails LOUDLY
-      * (FILE_NOT_EXIST on the vacuumed generation) — never silently
-      * wrong; reload at head and retry. Candidates are unchanged by construction — rows are
-      * unioned verbatim. As-of history restarts at the compaction point.
-      * Stop any attached ingest stream first (its pinned generation base
-      * would dangle; stream sidecars live with the stream's output, so
-      * this cannot be detected index-side).
-      *
-      * `vacuum = false` defers deleting the pre-compaction generations
-      * for reader grace (same knob as [[TextIndex]]'s compact); retire
-      * them later with [[vacuumOldGens]] — only AFTER draining every
-      * reader that still holds a pre-compaction handle (an operator
-      * contract the engine cannot enforce; see README "Long-running
-      * readers (grace-window recipe)"). */
+      * the compaction of [[GenerationalStore]]: bands, signatures and the
+      * live bucket-stats snapshot are unioned verbatim into `gen =
+      * nGens`, so candidates are unchanged. Stop any attached ingest
+      * stream first (its pinned generation base would dangle; stream
+      * sidecars live with the stream's output, so this cannot be
+      * detected index-side). `vacuum = false` keeps the old generations
+      * for reader grace; retire them with [[vacuumOldGens]]. */
     def compact(claimStaleness: Long =
                   GenerationLock.DefaultStalenessMs,
                 vacuum: Boolean = true): MinHashIndex = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to compact")
-      require(nGens >= 1,
-        s"index at $indexDir uses the pre-generational flat layout — " +
-          "rebuild it (save) to enable compaction")
-      // writer-claim serialization (shared [[GenerationLock]] protocol,
-      // same as TextIndex): compact stages gen = n_gens before its
-      // manifest commit, and the stale-handle re-check below is
-      // check-then-act — take the claim first, re-check under it
-      val claim = GenerationLock.claim(indexDir, nGens, claimStaleness)
-      try {
-      val live = load(spark, indexDir)
-      require(live.nGens == nGens && live.baseGen == baseGen,
-        s"stale index handle: $indexDir moved to gens " +
-          s"[${live.baseGen}, ${live.nGens}), this handle was loaded at " +
-          s"[$baseGen, $nGens) — reload before compacting")
-      Seq("bands", "signatures", "bucket_stats").foreach(sub =>
-        BucketFs.dropGensAtOrAbove(s"$indexDir/$sub", nGens))
-      val bW = bandPostings.withColumn("gen", lit(nGens))
-      bW.write.mode("append").partitionBy("gen", "band")
-        .parquet(s"$indexDir/bands")
-      val sW = signatures.withColumn("gen", lit(nGens))
-      sW.write.mode("append").partitionBy("gen")
-        .parquet(s"$indexDir/signatures")
-      val stW = bucketStats.withColumn("gen", lit(nGens))
-      stW.write.mode("append").partitionBy("gen")
-        .parquet(s"$indexDir/bucket_stats")
-      // ownership re-assert right before the commit point: a falsely
-      // stale-swept claim aborts here instead of co-committing
-      GenerationLock.verify(claim)
-      // schemas recomputed from the frames just written (not carried):
-      // identical for an r21 handle, and UPGRADES a pre-r21 index's
-      // manifest on its first compaction
-      writeManifest(indexDir, shingleK, numHashes, bands, nGens + 1, idCol,
-        baseGen = nGens, schemas = Map(
-          "bands" -> ReadBackSchema.of(bW.schema, Seq("gen", "band")),
-          "signatures" -> ReadBackSchema.of(sW.schema, Seq("gen")),
-          "bucket_stats" -> ReadBackSchema.of(stW.schema, Seq("gen"))))
-      if (vacuum)
-        Seq("bands", "signatures", "bucket_stats").foreach(sub =>
-          BucketFs.dropGensBelow(s"$indexDir/$sub", nGens))
-      load(spark, indexDir)
-      } finally GenerationLock.release(claim)
+      GenerationalStore.requireMutable(indexDir, asOf, nGens, "compact", 1)
+      Store.update(indexDir, nGens, claimStaleness,
+          _.requireHead(nGens, baseGen), vacuum = vacuum) { _ =>
+        def fold(df: DataFrame, sub: String, parts: String*) = {
+          val w = df.withColumn("gen", lit(nGens))
+          w.write.mode("append").partitionBy(parts: _*)
+            .parquet(s"$indexDir/$sub")
+          sub -> ReadBackSchema.of(w.schema, parts)
+        }
+        // schemas recomputed from the frames just written (not carried):
+        // identical for an r21 handle, and UPGRADES a pre-r21 index's
+        // manifest on its first compaction
+        fields(nGens + 1, nGens, Map(
+          fold(bandPostings, "bands", "gen", "band"),
+          fold(signatures, "signatures", "gen"),
+          fold(bucketStats, "bucket_stats", "gen")))
+      }(load(spark, indexDir))
     }
 
-    /** Retire generations a `compact(vacuum = false)` superseded:
-      * delete every generation below the LIVE manifest's `base_gen`.
-      * Claimless, idempotent, and safe against every mutator — see
-      * `TextIndex.vacuumOldGens` for the argument (the deleted set is
-      * referenced by no mutator and no current-head reader, and a racing
-      * compact only moves `base_gen` up). */
-    def vacuumOldGens(): MinHashIndex = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to vacuum")
-      val liveBase = load(spark, indexDir).baseGen
-      Seq("bands", "signatures", "bucket_stats").foreach(sub =>
-        BucketFs.dropGensBelow(s"$indexDir/$sub", liveBase))
-      load(spark, indexDir)
-    }
+    /** Retire generations a `compact(vacuum = false)` superseded
+      * ([[GenerationalStore.vacuum]]). */
+    def vacuumOldGens(): MinHashIndex =
+      Store.vacuum(indexDir, asOf)(load(spark, indexDir))
 
     /** Index `batch` incrementally: batch-sized appends to the band
       * postings and signatures, plus a stats merge that touches only
       * bucket-count rows — the whole corpus side is never rescanned.
-      *
-      * Commit protocol (same discipline as [[TextIndex]]): all three
-      * writes land in a NEW generation directory (`gen = nGens`), then
-      * one atomic manifest rename commits them together. Readers filter
-      * `gen < n_gens` (stats: `gen == n_gens - 1`), so an append that
-      * dies anywhere before the manifest rename leaves a loadable index
-      * that answers exactly as-before, and the next append sweeps the
-      * debris — without this, a crashed-then-retried append double-posts
-      * signatures and DUPLICATES candidate rows. Appending rows whose
-      * ids are already indexed still double-posts them (same contract as
+      * All three writes land in one new generation committed by the
+      * manifest ([[GenerationalStore]]), so a crashed-then-retried
+      * append never double-posts signatures. Appending rows whose ids
+      * are already indexed still double-posts them (same contract as
       * [[AnnIndex.IvfPqIndex.append]]: ids are keys, the caller dedups
       * ingest batches). Returns the refreshed index. */
     def append(batch: DataFrame, textCol: String,
@@ -370,60 +212,29 @@ object DedupIndex {
                                   claimStaleness: Long =
                                     GenerationLock.DefaultStalenessMs)
         : MinHashIndex = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to append")
-      require(nGens >= 0,
-        s"index at $indexDir uses the pre-generational flat layout — " +
-          "rebuild it (save) to enable appends")
-      // take the writer claim FIRST (shared [[GenerationLock]] protocol,
-      // same as TextIndex), then re-check the head under it: the
-      // stale-handle check below is check-then-act, so two sessions
-      // racing the same generation would both pass it and co-write one
-      // gen dir — silent candidate double counting
-      val claim = GenerationLock.claim(indexDir, nGens, claimStaleness)
-      try {
-      // a handle loaded before someone else's append would sweep THEIR
-      // committed generation as "debris" — refuse loudly instead
-      val live = load(spark, indexDir).nGens
-      require(live == nGens,
-        s"stale index handle: $indexDir has $live committed generations, " +
-          s"this handle was loaded at $nGens — chain the index returned " +
-          "by append instead of reusing the old one")
-      Seq("bands", "signatures", "bucket_stats").foreach(sub =>
-        BucketFs.dropGensAtOrAbove(s"$indexDir/$sub", nGens))
-      val sigs = sigsRaw
-        .localCheckpoint(true) // feeds bands + signatures writes: hash once
-      val banded = Dedup.lshBands(sigs, idCol, numHashes, bands)
-      val (bandsSchema, sigsSchema) =
-        writeGen(sigs, banded, idCol, numHashes, indexDir, gen = nGens)
-      // incremental stats merge: old stats ∪ batch stats → sum n, min rep.
-      // The batch side re-derives from `banded` (batch-sized recompute)
-      // rather than rescanning the appended files — cheaper and append-
-      // atomicity-independent.
-      val batchStats = banded.groupBy("band", "band_sig")
-        .agg(count(lit(1)).as("n"), min(col(idCol)).as("rep_id"))
-      val mergedStats = bucketStats.unionByName(batchStats)
-        .groupBy("band", "band_sig")
-        .agg(sum(col("n")).as("n"), min(col("rep_id")).as("rep_id"))
-        .withColumn("gen", lit(nGens))
-      mergedStats.write.mode("append").partitionBy("gen")
-        .parquet(s"$indexDir/bucket_stats")
-      // ownership re-assert right before the commit point: a falsely
-      // stale-swept claim aborts here instead of co-committing
-      GenerationLock.verify(claim)
-      // schemas from the frames just written — identical to the save-time
-      // entries for an r21 index, and upgrades a pre-r21 manifest on its
-      // first append
-      writeManifest(indexDir, shingleK, numHashes, bands, nGens + 1, idCol,
-        baseGen, schemas = Map(
+      GenerationalStore.requireMutable(indexDir, asOf, nGens, "append")
+      Store.update(indexDir, nGens, claimStaleness,
+          _.requireHead(nGens, baseGen)) { _ =>
+        val sigs = sigsRaw
+          .localCheckpoint(true) // feeds bands + signatures writes: hash once
+        val banded = Dedup.lshBands(sigs, idCol, numHashes, bands)
+        val (bandsSchema, sigsSchema) =
+          writeGen(sigs, banded, idCol, numHashes, indexDir, gen = nGens)
+        // incremental stats merge: old stats ∪ batch stats → sum n, min
+        // rep. The batch side re-derives from `banded` (batch-sized
+        // recompute) rather than rescanning the appended files.
+        val batchStats = banded.groupBy("band", "band_sig")
+          .agg(count(lit(1)).as("n"), min(col(idCol)).as("rep_id"))
+        val mergedStats = bucketStats.unionByName(batchStats)
+          .groupBy("band", "band_sig")
+          .agg(sum(col("n")).as("n"), min(col("rep_id")).as("rep_id"))
+          .withColumn("gen", lit(nGens))
+        mergedStats.write.mode("append").partitionBy("gen")
+          .parquet(s"$indexDir/bucket_stats")
+        fields(nGens + 1, baseGen, Map(
           "bands" -> bandsSchema, "signatures" -> sigsSchema,
           "bucket_stats" -> ReadBackSchema.of(mergedStats.schema, Seq("gen"))))
-      load(spark, indexDir)
-      } finally GenerationLock.release(claim)
-      // released in finally even on failure: the thrower is this live
-      // process (not a crash), so no partial write can still be racing;
-      // a KILLED process leaves the claim for the staleness sweep
+      }(load(spark, indexDir))
     }
 
     /** Near-duplicate candidates of `batch` against the INDEXED corpus:

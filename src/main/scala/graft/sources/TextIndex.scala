@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.operators.Dedup
 
@@ -29,13 +28,9 @@ import graft.operators.Dedup
   *  - `_text_index.json` — n_docs, sum_dl (corpus-level BM25 constants,
   *    additive under append), n_buckets, n_gens, id column, id range.
   *
-  * Commit protocol: the manifest is the single commit point. Each append
-  * writes its postings/termstats into a NEW generation directory
-  * (`gen = n_gens`), then atomically replaces the manifest (temp+rename)
-  * with `n_gens + 1`; readers filter `gen < n_gens`, so a crash anywhere
-  * before the rename leaves a loadable index that scores exactly
-  * as-before (orphan gen dirs are invisible and are cleaned up by the
-  * next append). Batch ids must be new: a cheap manifest id-range check
+  * Commit protocol: [[GenerationalStore]] — each append writes its
+  * postings/termstats into a new generation committed by one manifest
+  * rename. Batch ids must be new: a cheap manifest id-range check
   * screens the batch, and only on range overlap does a precise
   * postings-id semi-join (id column only, committed gens) run.
   *
@@ -49,6 +44,9 @@ import graft.operators.Dedup
 object TextIndex {
 
   private val ManifestFile = "_text_index.json"
+
+  private val Store = GenerationalStore(ManifestFile, "index_type", "bm25",
+    Seq("postings", "termstats"), "a text index")
 
   private def tokensOf(text: org.apache.spark.sql.Column) =
     split(Dedup.normalizedText(coalesce(text, lit(""))), " ")
@@ -136,64 +134,39 @@ object TextIndex {
     }
   }
 
-  /** Delete generation directories the manifest never committed (debris
-    * of a crashed append) so a retry cannot double-write into them. */
-  private def dropUncommittedGens(indexDir: String, committed: Int): Unit =
-    Seq("postings", "termstats").foreach(sub =>
-      BucketFs.dropGensAtOrAbove(s"$indexDir/$sub", committed))
-
-  /** Staleness window for the writer claim — the family-wide constant,
-    * see [[GenerationLock.DefaultStalenessMs]]. Kept as a named alias
-    * because it is this API's documented parameter default. */
-  val DefaultClaimStalenessMs: Long = GenerationLock.DefaultStalenessMs
+  /** Stream-ingest sidecars ([[graft.streaming.StreamingOps
+    * .textIndexIngest]]) attached to `indexDir`. */
+  private def streamSidecars(indexDir: String): Seq[String] = {
+    val (fs, root) = BucketFs.resolve(indexDir)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("_stream_base_gens")).map(_.toString)
+  }
 
   /** Build the index. One pass over the corpus: tokenize → per-(doc,
     * term) tf with dl denormalized → bucket-partitioned postings and
     * per-term df rows in generation 0; corpus constants land in the
-    * manifest, whose (atomic) write commits the build. */
+    * manifest. A provisioning save of [[GenerationalStore]]; it also
+    * drops any stream-ingest sidecars (their pinned generation base died
+    * with the old index). */
   def save(corpus: DataFrame, textCol: String, idCol: String,
            indexDir: String, nBuckets: Int = 64,
-           claimStaleness: Long = DefaultClaimStalenessMs): Unit = {
+           claimStaleness: Long = GenerationLock.DefaultStalenessMs): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    // PROVISIONING is a mutation too (round 17): writeGen appends into
-    // the generation directories, so two schedulers retrying one build
-    // would co-write generation 0 and the surviving manifest would
-    // silently serve BOTH writers' postings. The whole-dir claim
-    // serializes saves; save-vs-append stays an operator-coordinated
-    // destructive rebuild (appends hold per-generation slots).
-    val claim = GenerationLock.claimDir(indexDir, claimStaleness)
-    try {
-    // save overwrites: the OLD MANIFEST goes first, so a crash mid-save
-    // leaves an index that fails to load LOUDLY instead of one whose
-    // stale constants silently mis-score the new postings; then clear
-    // previous data (writeGen appends into generation dirs, so stale
-    // files would otherwise merge in) and any stream-ingest sidecars
-    // (their pinned generation base died with the old index)
-    BucketFs.deleteRecursive(s"$indexDir/$ManifestFile")
-    val (fs, root) = BucketFs.resolve(indexDir)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName.startsWith("_stream_base_gens"))
-          fs.delete(st.getPath, false)
-      }
-    Seq("postings", "termstats").foreach(sub =>
-      BucketFs.deleteRecursive(s"$indexDir/$sub"))
-    val posts = withBucket(postingsOf(corpus, textCol, idCol), nBuckets)
-      .localCheckpoint(true) // postings feed both writes; tokenize once
-    writeGen(posts, indexDir, gen = 0)
-    val (nDocs, sumDl, idRange) = corpusStats(posts)
-    // ownership re-assert right before the commit point (manifest write)
-    GenerationLock.verify(claim)
-    writeManifest(indexDir, nDocs, sumDl, nBuckets, 1, idCol, idRange,
-      Seq((nDocs, sumDl)))
-    } finally GenerationLock.release(claim)
+    Store.save(indexDir, claimStaleness) {
+      streamSidecars(indexDir).foreach(BucketFs.deleteRecursive)
+      val posts = withBucket(postingsOf(corpus, textCol, idCol), nBuckets)
+        .localCheckpoint(true) // postings feed both writes; tokenize once
+      writeGen(posts, indexDir, gen = 0)
+      val (nDocs, sumDl, idRange) = corpusStats(posts)
+      manifest(nDocs, sumDl, nBuckets, 1, idCol, idRange, Seq((nDocs, sumDl)))
+    }
   }
 
-  private def writeManifest(indexDir: String, nDocs: Long, sumDl: Long,
-                            nBuckets: Int, nGens: Int, idCol: String,
-                            idRange: Option[(Long, Long)],
-                            genStats: Seq[(Long, Long)],
-                            baseGen: Int = 0): Unit = {
+  private def manifest(nDocs: Long, sumDl: Long, nBuckets: Int, nGens: Int,
+                       idCol: String, idRange: Option[(Long, Long)],
+                       genStats: Seq[(Long, Long)], baseGen: Int = 0)
+      : List[(String, JValue)] = {
     val range: List[(String, JValue)] = idRange.toList.flatMap {
       case (lo, hi) => List("min_id" -> JInt(lo), "max_id" -> JInt(hi))
     }
@@ -206,13 +179,11 @@ object TextIndex {
       else List("gen_stats" -> JArray(genStats.toList.map { case (n, dl) =>
         JArray(List(JInt(n), JInt(dl)))
       }))
-    val j: JValue = JObject(List[(String, JValue)](
+    List[(String, JValue)](
       "index_type" -> JString("bm25"), "n_docs" -> JInt(nDocs),
       "sum_dl" -> JInt(sumDl), "n_buckets" -> JInt(nBuckets),
       "n_gens" -> JInt(nGens), "base_gen" -> JInt(baseGen),
-      "id_col" -> JString(idCol)) ++ range ++ stats)
-    BucketFs.writeStringAtomic(s"$indexDir/$ManifestFile",
-      JsonMethods.pretty(JsonMethods.render(j)))
+      "id_col" -> JString(idCol)) ++ range ++ stats
   }
 
   final case class Bm25Index(spark: SparkSession, indexDir: String,
@@ -222,188 +193,93 @@ object TextIndex {
                              genStats: Seq[(Long, Long)] = Nil,
                              asOf: Boolean = false, baseGen: Int = 0) {
 
-    /** Committed rows of `postings` or `termstats`: partition filter
-      * `baseGen <= gen < nGens` hides crashed-append debris above and
-      * compacted-away (vacuumable) generations below. A pre-generational
-      * index (nGens < 0, flat layout without a gen column) reads as-is —
-      * searchable, but append is refused.
-      *
-      * Generational reads pass the layout's STATIC schema (r21): ids are
-      * cast long at write time and every other column's type is fixed by
-      * [[TextIndex.writeGen]]'s explicit select, so `spark.read.parquet`'s
-      * eager listing+footer inference (~100 ms/resolution vs ~18 ms with
-      * a schema, ResolveBench) buys nothing — and the streaming ingest
-      * re-resolves these per micro-batch. Read-back parity is spec-pinned
-      * (TextIndexSpec). The flat pre-generational layout keeps
-      * inference. */
-    private def committed(sub: String): DataFrame = {
-      val raw =
-        if (nGens < 0) spark.read.parquet(s"$indexDir/$sub")
-        else spark.read.schema(TextIndex.readBackSchema(sub))
-          .parquet(s"$indexDir/$sub")
-      if (nGens < 0) raw
-      else raw.where(col("gen") >= lit(baseGen) && col("gen") < lit(nGens))
-    }
+    /** Committed rows of `postings` or `termstats`
+      * ([[GenerationalStore.committed]]). A pre-generational index
+      * (nGens < 0, flat layout) reads as-is — searchable, but append is
+      * refused. Generational reads pass the layout's STATIC schema (r21):
+      * every column's type is fixed by [[TextIndex.writeGen]]'s explicit
+      * select, so footer inference buys nothing — and the streaming
+      * ingest re-resolves these per micro-batch. Read-back parity is
+      * spec-pinned (TextIndexSpec). */
+    private def committed(sub: String): DataFrame =
+      GenerationalStore.committed(spark, indexDir, sub, nGens, baseGen,
+        if (nGens < 0) None else Some(TextIndex.readBackSchema(sub)))
 
-    /** Fold every committed generation into ONE replacement generation —
-      * the operational answer to generation sprawl (a long-appended index
-      * accumulates gen directories; listing cost grows with history).
-      *
-      * Crash-safe without any unreadable window: the merged copy lands in
-      * a NEW generation (`gen = nGens`), then one atomic manifest rename
-      * commits `base_gen = nGens, n_gens = nGens + 1` — readers filter
-      * `base_gen <= gen < n_gens`, so until that rename the index answers
-      * from the old generations, and afterwards exclusively from the
-      * compacted one. The now-unreferenced old generations are vacuumed
-      * AFTER the commit (crash-skipping the vacuum leaves invisible
-      * directories that the next compact re-sweeps). Scores are
-      * unchanged by construction: postings rows are unioned verbatim and
-      * termstats deltas re-derive from them, while the corpus constants
-      * don't move. As-of history restarts at the compaction point (the
-      * pre-compaction generations no longer exist to travel to). Refused
-      * while a stream-ingest sidecar is attached (its pinned generation
-      * base would dangle).
-      *
-      * `vacuum = false` defers deleting the pre-compaction generations:
-      * post-commit readers ignore them (the gen filter is
-      * `base_gen <= gen < n_gens`), but handles loaded BEFORE the commit
-      * keep answering from the old files instead of failing loudly
-      * mid-scan — the reader-grace knob for long-running queries at
-      * 100 TB. Retire the superseded generations later with
-      * [[vacuumOldGens]] — only AFTER draining every reader that still
-      * holds a pre-compaction handle (an operator contract the engine
-      * cannot enforce; see README "Long-running readers (grace-window
-      * recipe)"). */
-    def compact(claimStaleness: Long = DefaultClaimStalenessMs,
+    /** Fold every committed generation into ONE replacement generation
+      * (the compaction of [[GenerationalStore]]; `vacuum = false` keeps
+      * the old generations for reader grace, retire them with
+      * [[vacuumOldGens]]). Scores are unchanged by construction:
+      * postings rows are unioned verbatim and termstats deltas re-derive
+      * from them, while the corpus constants don't move. Refused while a
+      * stream-ingest sidecar is attached (its pinned generation base
+      * would dangle). */
+    def compact(claimStaleness: Long = GenerationLock.DefaultStalenessMs,
                 vacuum: Boolean = true): Bm25Index = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to compact")
-      require(nGens >= 1,
-        s"index at $indexDir uses the pre-generational flat layout — " +
-          "rebuild it (save) to enable compaction")
-      // same writer-claim serialization as append: compact also stages
-      // gen = n_gens before its manifest commit
-      val claim = GenerationLock.claim(indexDir, nGens, claimStaleness)
-      try {
-      val live = load(spark, indexDir)
-      require(live.nGens == nGens && live.baseGen == baseGen,
-        s"stale index handle: $indexDir moved to gens " +
-          s"[${live.baseGen}, ${live.nGens}), this handle was loaded at " +
-          s"[$baseGen, $nGens) — reload before compacting")
-      val (fs, root) = BucketFs.resolve(indexDir)
-      if (fs.exists(root))
-        require(!fs.listStatus(root).exists(
-            _.getPath.getName.startsWith("_stream_base_gens")),
-          s"a stream ingest is attached to $indexDir (sidecar present) — " +
-            "stop it before compacting")
-      dropUncommittedGens(indexDir, nGens)
-      val merged = committed("postings")
-        .select(col("bucket"), col("term"), col("id"), col("tf"), col("dl"))
-        .localCheckpoint(true) // feeds postings + termstats writes: one read
-      writeGen(merged, indexDir, gen = nGens)
-      // ownership re-assert right before the commit point: a falsely
-      // stale-swept claim aborts here instead of co-committing
-      GenerationLock.verify(claim)
-      writeManifest(indexDir, nDocs, sumDl, nBuckets, nGens + 1, idCol,
-        idRange, Seq((nDocs, sumDl)), baseGen = nGens)
-      if (vacuum)
-        Seq("postings", "termstats").foreach(sub =>
-          BucketFs.dropGensBelow(s"$indexDir/$sub", nGens))
-      load(spark, indexDir)
-      } finally GenerationLock.release(claim)
+      GenerationalStore.requireMutable(indexDir, asOf, nGens, "compact", 1)
+      Store.update(indexDir, nGens, claimStaleness, { live =>
+          live.requireHead(nGens, baseGen)
+          require(streamSidecars(indexDir).isEmpty,
+            s"a stream ingest is attached to $indexDir (sidecar present) — " +
+              "stop it before compacting")
+        }, vacuum = vacuum) { _ =>
+        val merged = committed("postings")
+          .select(col("bucket"), col("term"), col("id"), col("tf"), col("dl"))
+          .localCheckpoint(true) // feeds postings + termstats writes: one read
+        writeGen(merged, indexDir, gen = nGens)
+        manifest(nDocs, sumDl, nBuckets, nGens + 1, idCol, idRange,
+          Seq((nDocs, sumDl)), baseGen = nGens)
+      }(load(spark, indexDir))
     }
 
-    /** Retire generations a compaction superseded but left on disk
-      * (`compact(vacuum = false)`): delete every generation below the
-      * LIVE manifest's `base_gen`. Claimless by design — those
-      * generations are referenced by NO mutator and NO current-head
-      * reader (every filter is `base_gen <= gen < n_gens`), and a
-      * concurrent compact only moves `base_gen` UP, so the set this
-      * deletes can only shrink what a racing vacuum would also delete.
-      * Idempotent. Pre-compaction handles that were enjoying the grace
-      * period fail loudly on their next action, as documented on
-      * [[compact]]. */
-    def vacuumOldGens(): Bm25Index = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to vacuum")
-      val liveBase = load(spark, indexDir).baseGen
-      Seq("postings", "termstats").foreach(sub =>
-        BucketFs.dropGensBelow(s"$indexDir/$sub", liveBase))
-      load(spark, indexDir)
-    }
+    /** Retire generations a `compact(vacuum = false)` superseded
+      * ([[GenerationalStore.vacuum]]). */
+    def vacuumOldGens(): Bm25Index =
+      Store.vacuum(indexDir, asOf)(load(spark, indexDir))
 
     /** Grow the index: the batch's postings and df-delta rows land in a
-      * new generation directory, then one atomic manifest replace
-      * commits them together with the added constants (see the commit
-      * protocol in the object doc — a crash before the manifest rename
-      * leaves the index exactly as-before). Ids must be new; the
-      * manifest id-range screens the batch and a precise postings
-      * semi-join settles range overlaps. Returns a fresh load. */
+      * new generation committed together with the added constants
+      * ([[GenerationalStore]]). Ids must be new; the manifest id-range
+      * screens the batch and a precise postings semi-join settles range
+      * overlaps. Returns a fresh load. */
     def append(batch: DataFrame, textCol: String,
-               claimStaleness: Long = DefaultClaimStalenessMs): Bm25Index = {
-      require(!asOf,
-        s"as-of (time-travel) handles are read-only; reload $indexDir at " +
-          "head to append")
-      require(nGens >= 0,
-        s"index at $indexDir uses the pre-generational flat layout — " +
-          "rebuild it (save) to enable appends")
-      // take the writer claim FIRST, then re-check the head under it:
-      // the stale-handle check is check-then-act, so two sessions racing
-      // the same generation would both pass it and co-write one gen dir
-      // — the atomic claim serializes them, and the loser's re-check
-      // then reports the head moved
-      val claim = GenerationLock.claim(indexDir, nGens, claimStaleness)
-      try {
-      // a handle loaded before someone else's append would sweep THEIR
-      // committed generation as "debris" — refuse loudly instead
-      val live = load(spark, indexDir).nGens
-      require(live == nGens,
-        s"stale index handle: $indexDir has $live committed generations, " +
-          s"this handle was loaded at $nGens — chain the index returned " +
-          "by append instead of reusing the old one")
-      dropUncommittedGens(indexDir, nGens)
-      val posts = withBucket(postingsOf(batch, textCol, idCol), nBuckets)
-        .localCheckpoint(true)
-      val (bN, bDl, bRange) = corpusStats(posts)
-      val overlaps = (idRange, bRange) match {
-        case (Some((lo, hi)), Some((bLo, bHi))) => bLo <= hi && bHi >= lo
-        case _ => false
-      }
-      if (overlaps) {
-        // range overlap: precise check — committed postings pruned to the
-        // id column, semi-joined against the batch's distinct ids
-        val dup = committed("postings").select(col("id"))
-          .join(posts.select(col("id")).distinct(), Seq("id"), "left_semi")
-          .limit(1).count()
-        require(dup == 0,
-          s"append batch contains ids already in the index at $indexDir " +
-            "— re-indexing an id would double-count it")
-      }
-      writeGen(posts, indexDir, gen = nGens)
-      val newRange = (idRange, bRange) match {
-        case (Some((lo, hi)), Some((bLo, bHi))) =>
-          Some((math.min(lo, bLo), math.max(hi, bHi)))
-        case (r, None) => r
-        case (None, r) => r
-      }
-      // only extend per-gen stats when the full (post-base) history is
-      // present — claiming a partial history would make as-of reads
-      // silently wrong
-      val newStats =
-        if (genStats.length == nGens - baseGen) genStats :+ ((bN, bDl))
-        else Nil
-      // ownership re-assert right before the commit point: a falsely
-      // stale-swept claim aborts here instead of co-committing
-      GenerationLock.verify(claim)
-      writeManifest(indexDir, nDocs + bN, sumDl + bDl, nBuckets,
-        nGens + 1, idCol, newRange, newStats, baseGen)
-      load(spark, indexDir)
-      } finally GenerationLock.release(claim)
-      // released in finally even on failure: the thrower is this live
-      // process (not a crash), so no partial write can still be racing;
-      // a KILLED process leaves the claim for the staleness sweep
+               claimStaleness: Long =
+                 GenerationLock.DefaultStalenessMs): Bm25Index = {
+      GenerationalStore.requireMutable(indexDir, asOf, nGens, "append")
+      Store.update(indexDir, nGens, claimStaleness,
+          _.requireHead(nGens, baseGen)) { _ =>
+        val posts = withBucket(postingsOf(batch, textCol, idCol), nBuckets)
+          .localCheckpoint(true)
+        val (bN, bDl, bRange) = corpusStats(posts)
+        val overlaps = (idRange, bRange) match {
+          case (Some((lo, hi)), Some((bLo, bHi))) => bLo <= hi && bHi >= lo
+          case _ => false
+        }
+        if (overlaps) {
+          // range overlap: precise check — committed postings pruned to
+          // the id column, semi-joined against the batch's distinct ids
+          val dup = committed("postings").select(col("id"))
+            .join(posts.select(col("id")).distinct(), Seq("id"), "left_semi")
+            .limit(1).count()
+          require(dup == 0,
+            s"append batch contains ids already in the index at $indexDir " +
+              "— re-indexing an id would double-count it")
+        }
+        writeGen(posts, indexDir, gen = nGens)
+        val newRange = (idRange, bRange) match {
+          case (Some((lo, hi)), Some((bLo, bHi))) =>
+            Some((math.min(lo, bLo), math.max(hi, bHi)))
+          case (r, None) => r
+          case (None, r) => r
+        }
+        // only extend per-gen stats when the full (post-base) history is
+        // present — claiming a partial history would make as-of reads
+        // silently wrong
+        val newStats =
+          if (genStats.length == nGens - baseGen) genStats :+ ((bN, bDl))
+          else Nil
+        manifest(nDocs + bN, sumDl + bDl, nBuckets, nGens + 1, idCol,
+          newRange, newStats, baseGen)
+      }(load(spark, indexDir))
     }
 
     /** BM25 top-k for a term set. Query terms go through the SAME
@@ -470,40 +346,12 @@ object TextIndex {
     * manifest (indexes whose history predates `gen_stats` refuse). */
   def load(spark: SparkSession, indexDir: String,
            asOfGen: Int = -1): Bm25Index = {
-    val p = s"$indexDir/$ManifestFile"
-    if (!BucketFs.exists(p))
-      throw new IllegalArgumentException(
-        s"no $ManifestFile in $indexDir — not a text index?")
-    val mf = JsonMethods.parse(BucketFs.readString(p))
-    def long(field: String): Long = mf \ field match {
-      case JInt(x) => x.toLong
-      case other => throw new IllegalArgumentException(
-        s"manifest field '$field' missing or non-integer: $other")
-    }
-    def optLong(field: String): Option[Long] = mf \ field match {
-      case JInt(x) => Some(x.toLong)
-      case _ => None
-    }
-    val idxType = mf \ "index_type" match { case JString(s) => s; case _ => "?" }
-    require(idxType == "bm25", s"unsupported index_type '$idxType'")
-    val idCol = mf \ "id_col" match {
-      case JString(s) => s
-      case _ => throw new IllegalArgumentException("manifest missing id_col")
-    }
-    val idRange = (optLong("min_id"), optLong("max_id")) match {
+    val m = Store.read(indexDir)
+    val idRange = (m.optLong("min_id"), m.optLong("max_id")) match {
       case (Some(lo), Some(hi)) => Some((lo, hi))
       case _ => None
     }
-    // missing n_gens = a pre-generational index: loadable read-only.
-    // Present-but-malformed is CORRUPTION, not legacy — fail loudly
-    // (a -1 fallback would silently drop the generation filter)
-    val nGens = mf \ "n_gens" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => -1
-      case other => throw new IllegalArgumentException(
-        s"bad n_gens in manifest: $other")
-    }
-    val genStats: Seq[(Long, Long)] = mf \ "gen_stats" match {
+    val genStats: Seq[(Long, Long)] = m.json \ "gen_stats" match {
       case JArray(xs) => xs.map {
         case JArray(List(JInt(n), JInt(dl))) => (n.toLong, dl.toLong)
         case other => throw new IllegalArgumentException(
@@ -511,35 +359,18 @@ object TextIndex {
       }
       case _ => Nil
     }
-    val baseGen = mf \ "base_gen" match {
-      case JInt(x) => x.toInt
-      case JNothing | JNull => 0 // pre-compaction manifests: base is 0
-      case other => throw new IllegalArgumentException(
-        s"bad base_gen in manifest: $other")
-    }
-    if (asOfGen < 0)
-      Bm25Index(spark, indexDir, long("n_docs"), long("sum_dl"),
-        long("n_buckets").toInt, nGens, idCol, idRange, genStats,
-        baseGen = baseGen)
-    else {
-      require(nGens >= 0,
-        s"as-of reads need the generational layout: $indexDir")
-      require(asOfGen <= nGens,
-        s"as-of generation $asOfGen is ahead of the $nGens committed " +
-          s"generations in $indexDir")
-      // strict: the physical gen at `baseGen` holds the FOLDED prefix, so
-      // the earliest reachable historical state is baseGen + 1 (= the
-      // pre-compaction head; older points renumber +1 per compaction)
-      require(asOfGen > baseGen,
-        s"as-of generation $asOfGen is at or before the compaction base " +
-          s"$baseGen in $indexDir — that history has been folded away")
-      require(genStats.length == nGens - baseGen,
-        s"index at $indexDir has no full per-generation history " +
-          "(gen_stats) — its lineage predates as-of support; rebuild")
-      val hist = genStats.take(asOfGen - baseGen)
-      Bm25Index(spark, indexDir, hist.map(_._1).sum, hist.map(_._2).sum,
-        long("n_buckets").toInt, asOfGen, idCol, idRange,
-        genStats, asOf = true, baseGen = baseGen)
-    }
+    val gens = m.asOf(asOfGen)
+    val (nDocs, sumDl) =
+      if (asOfGen < 0) (m.long("n_docs"), m.long("sum_dl"))
+      else {
+        require(genStats.length == m.nGens - m.baseGen,
+          s"index at $indexDir has no full per-generation history " +
+            "(gen_stats) — its lineage predates as-of support; rebuild")
+        val hist = genStats.take(asOfGen - m.baseGen)
+        (hist.map(_._1).sum, hist.map(_._2).sum)
+      }
+    Bm25Index(spark, indexDir, nDocs, sumDl, m.int("n_buckets"), gens,
+      m.str("id_col"), idRange, genStats, asOf = asOfGen >= 0,
+      baseGen = m.baseGen)
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.operators.TextAnalysis
 import graft.operators.TextAnalysis.{DsirWeights, NaiveBayesCounts, NaiveBayesModel}
@@ -21,49 +20,48 @@ import graft.operators.TextAnalysis.{DsirWeights, NaiveBayesCounts, NaiveBayesMo
   * the scoring weights are a pure derived function of the counts
   * (quantized integer arithmetic), so counts → model → score is
   * bit-reproducible whether the counts came from fresh training, a disk
-  * round trip, or k incremental appends. Appends follow the shared
-  * generation-commit protocol: merged counts land in `counts/gen=N+1`,
-  * then one atomic manifest rename moves the live generation — a
-  * crashed append leaves the old model loadable and its debris is
-  * swept on retry. DSIR weights persist in weight form (one frozen
-  * estimation pass; re-estimation is retraining, not appending).
-  *
-  * The manifest is the commit point (same protocol as the indexes: old
-  * manifest deleted first on save so a crashed SAVE fails to load
-  * LOUDLY, new manifest written last via atomic temp+rename).
+  * round trip, or k incremental appends. Saves and appends follow the
+  * generation-commit protocol of [[GenerationalStore]]: merged counts
+  * land in `counts/gen=N+1`, then one atomic manifest rename moves the
+  * single live generation (`gen`). DSIR weights persist in weight form
+  * (one frozen estimation pass; re-estimation is retraining, not
+  * appending).
   */
 object TextModelStore {
 
   val ManifestFile = "model_manifest.json"
 
-  private def commit(dir: String, fields: List[(String, JValue)]): Unit =
-    BucketFs.writeStringAtomic(s"$dir/$ManifestFile",
-      JsonMethods.pretty(JsonMethods.render(JObject(fields))))
+  private def store(modelType: String, subs: String*) =
+    GenerationalStore(ManifestFile, "model_type", modelType, subs,
+      "a saved model (or a crashed save)")
+  private val NbStore = store("naive_bayes", "counts")
+  private val CharLmStore = store("char_lm", "ngrams", "contexts")
+  private val DsirStore = store("dsir", "weights")
 
-  private def manifest(dir: String, wantType: String): JValue = {
-    val p = s"$dir/$ManifestFile"
-    if (!BucketFs.exists(p))
-      throw new IllegalArgumentException(
-        s"no $ManifestFile in $dir — not a saved model (or a crashed save)")
-    val mf = JsonMethods.parse(BucketFs.readString(p))
-    mf \ "model_type" match {
-      case JString(t) if t == wantType => mf
-      case other => throw new IllegalArgumentException(
-        s"expected model_type '$wantType' in $dir, found $other")
-    }
+  private def nbFields(c: NaiveBayesCounts, gen: Long)
+      : List[(String, JValue)] = List(
+    "model_type" -> JString("naive_bayes"),
+    "nd_pos" -> JInt(c.ndPos), "nd" -> JInt(c.nd), "gen" -> JInt(gen))
+
+  private def charLmFields(n: Int, gen: Long): List[(String, JValue)] = List(
+    "model_type" -> JString("char_lm"), "n" -> JInt(n), "gen" -> JInt(gen))
+
+  /** Append to the single live generation `gen` of `dir`: the claim
+    * covers the staged generation `gen + 1`, and a head that moved
+    * before the claim is refused (two sessions racing one head would
+    * otherwise commit merged counts containing BOTH batches against ONE
+    * prior — double counting). */
+  private def appendGen(store: GenerationalStore, dir: String,
+                        claimStaleness: Long)
+                       (stage: (GenerationalStore.Manifest, Long) =>
+                          List[(String, JValue)]): Unit = {
+    val gen = store.read(dir).long("gen")
+    store.update(dir, (gen + 1).toInt, claimStaleness, { mf =>
+      require(mf.long("gen") == gen,
+        s"stale model head: $dir moved to generation ${mf.long("gen")} " +
+          s"while this append targeted $gen — retry against the new head")
+    })(stage(_, gen))(())
   }
-
-  private def long(mf: JValue, field: String): Long = mf \ field match {
-    case JInt(x) => x.toLong
-    case other => throw new IllegalArgumentException(
-      s"manifest field '$field' missing or non-integer: $other")
-  }
-
-  private def commitNb(dir: String, c: NaiveBayesCounts, gen: Long): Unit =
-    commit(dir, List(
-      "model_type" -> JString("naive_bayes"),
-      "nd_pos" -> JInt(c.ndPos), "nd" -> JInt(c.nd),
-      "gen" -> JInt(gen)))
 
   /** Train-and-persist: aggregate the labeled batch into counts,
     * validate it derives a scorable model, write generation 0, commit. */
@@ -73,18 +71,10 @@ object TextModelStore {
                        GenerationLock.DefaultStalenessMs): Unit = {
     val c = TextAnalysis.naiveBayesCounts(labeled, textCol, labelCol)
     TextAnalysis.naiveBayesFromCounts(c) // class-balance guard pre-commit
-    // provisioning is a mutation too (round 17): two racing saves would
-    // interleave their overwrite-mode count rewrites and the surviving
-    // manifest could serve a mix of both runs' files — same whole-dir
-    // claim discipline as the index saves
-    val claim = GenerationLock.claimDir(dir, claimStaleness)
-    try {
-      BucketFs.deleteRecursive(s"$dir/$ManifestFile")
-      BucketFs.deleteRecursive(s"$dir/counts")
+    NbStore.save(dir, claimStaleness) {
       c.tokenCounts.write.mode("overwrite").parquet(s"$dir/counts/gen=0")
-      GenerationLock.verify(claim) // re-assert right before the commit
-      commitNb(dir, c, gen = 0)
-    } finally GenerationLock.release(claim)
+      nbFields(c, gen = 0)
+    }
   }
 
   /** Merge a NEW labeled batch into the persisted counts (counts are
@@ -98,40 +88,25 @@ object TextModelStore {
                        textCol: String, labelCol: String, dir: String,
                        claimStaleness: Long =
                          GenerationLock.DefaultStalenessMs): Unit = {
-    val gen = long(manifest(dir, "naive_bayes"), "gen")
-    // writer-claim serialization on the STAGED generation (shared
-    // [[GenerationLock]] protocol, same as the indexes): two sessions
-    // racing the same head would both read gen, co-write gen+1, and the
-    // loser's manifest rename would commit merged counts containing BOTH
-    // batches exactly once each against ONE prior — double counting.
-    // Claim first, then re-read the head under the claim.
-    val claim = GenerationLock.claim(dir, (gen + 1).toInt, claimStaleness)
-    try {
-      val mf = manifest(dir, "naive_bayes")
-      require(long(mf, "gen") == gen,
-        s"stale model head: $dir moved to generation ${long(mf, "gen")} " +
-          s"while this append targeted $gen — retry against the new head")
-      BucketFs.dropGensAtOrAbove(s"$dir/counts", (gen + 1).toInt)
+    appendGen(NbStore, dir, claimStaleness) { (mf, gen) =>
       val prior = NaiveBayesCounts(
         spark.read.parquet(s"$dir/counts/gen=$gen"),
-        long(mf, "nd_pos"), long(mf, "nd"))
+        mf.long("nd_pos"), mf.long("nd"))
       val merged = TextAnalysis.naiveBayesMerge(prior,
         TextAnalysis.naiveBayesCounts(newLabeled, textCol, labelCol))
       TextAnalysis.naiveBayesFromCounts(merged) // guard before committing
       merged.tokenCounts.write.mode("overwrite")
         .parquet(s"$dir/counts/gen=${gen + 1}")
-      // ownership re-assert right before the commit point
-      GenerationLock.verify(claim)
-      commitNb(dir, merged, gen + 1)
-    } finally GenerationLock.release(claim)
+      nbFields(merged, gen + 1)
+    }
   }
 
   /** Load the committed counts (the additive form). */
   def loadNaiveBayesCounts(spark: SparkSession, dir: String): NaiveBayesCounts = {
-    val mf = manifest(dir, "naive_bayes")
+    val mf = NbStore.read(dir)
     NaiveBayesCounts(
-      spark.read.parquet(s"$dir/counts/gen=${long(mf, "gen")}"),
-      long(mf, "nd_pos"), long(mf, "nd"))
+      spark.read.parquet(s"$dir/counts/gen=${mf.long("gen")}"),
+      mf.long("nd_pos"), mf.long("nd"))
   }
 
   /** Load the scoring-form model; scores bit-identically to a model
@@ -150,17 +125,11 @@ object TextModelStore {
                  claimStaleness: Long =
                    GenerationLock.DefaultStalenessMs): Unit = {
     val c = TextAnalysis.charLmTrain(corpus, textCol, n)
-    val claim = GenerationLock.claimDir(dir, claimStaleness)
-    try {
-      BucketFs.deleteRecursive(s"$dir/$ManifestFile")
-      Seq("ngrams", "contexts").foreach(sub =>
-        BucketFs.deleteRecursive(s"$dir/$sub"))
+    CharLmStore.save(dir, claimStaleness) {
       c.ngrams.write.mode("overwrite").parquet(s"$dir/ngrams/gen=0")
       c.contexts.write.mode("overwrite").parquet(s"$dir/contexts/gen=0")
-      GenerationLock.verify(claim) // re-assert right before the commit
-      commit(dir, List(
-        "model_type" -> JString("char_lm"), "n" -> JInt(n), "gen" -> JInt(0)))
-    } finally GenerationLock.release(claim)
+      charLmFields(n, gen = 0)
+    }
   }
 
   /** Merge a NEW corpus batch into the persisted gram counts (additive;
@@ -173,18 +142,8 @@ object TextModelStore {
                    dir: String,
                    claimStaleness: Long =
                      GenerationLock.DefaultStalenessMs): Unit = {
-    val gen = long(manifest(dir, "char_lm"), "gen")
-    // same writer-claim serialization as [[appendNaiveBayes]]: claim the
-    // staged generation first, re-read the head under the claim
-    val claim = GenerationLock.claim(dir, (gen + 1).toInt, claimStaleness)
-    try {
-      val mf = manifest(dir, "char_lm")
-      require(long(mf, "gen") == gen,
-        s"stale model head: $dir moved to generation ${long(mf, "gen")} " +
-          s"while this append targeted $gen — retry against the new head")
-      val n = long(mf, "n").toInt
-      Seq("ngrams", "contexts").foreach(sub =>
-        BucketFs.dropGensAtOrAbove(s"$dir/$sub", (gen + 1).toInt))
+    appendGen(CharLmStore, dir, claimStaleness) { (mf, gen) =>
+      val n = mf.int("n")
       val batch = TextAnalysis.charLmTrain(corpus, textCol, n)
       def merge(sub: String, add: org.apache.spark.sql.DataFrame): Unit =
         spark.read.parquet(s"$dir/$sub/gen=$gen")
@@ -193,48 +152,37 @@ object TextModelStore {
           .write.mode("overwrite").parquet(s"$dir/$sub/gen=${gen + 1}")
       merge("ngrams", batch.ngrams)
       merge("contexts", batch.contexts)
-      // ownership re-assert right before the commit point
-      GenerationLock.verify(claim)
-      commit(dir, List(
-        "model_type" -> JString("char_lm"), "n" -> JInt(n),
-        "gen" -> JInt(gen + 1)))
-    } finally GenerationLock.release(claim)
+      charLmFields(n, gen + 1)
+    }
   }
 
   /** Load the committed gram counts; scoring through
     * [[TextAnalysis.charLmScore]] is bit-identical to a model trained in
     * memory on the same (merged) corpus. */
   def loadCharLm(spark: SparkSession, dir: String): TextAnalysis.CharLmCounts = {
-    val mf = manifest(dir, "char_lm")
-    val gen = long(mf, "gen")
+    val mf = CharLmStore.read(dir)
+    val gen = mf.long("gen")
     TextAnalysis.CharLmCounts(
       spark.read.parquet(s"$dir/ngrams/gen=$gen"),
       spark.read.parquet(s"$dir/contexts/gen=$gen"),
-      long(mf, "n").toInt)
+      mf.int("n"))
   }
 
   /** Persist DSIR importance weights with their bucket-space size. */
   def saveDsir(model: DsirWeights, dir: String,
                claimStaleness: Long =
                  GenerationLock.DefaultStalenessMs): Unit = {
-    val claim = GenerationLock.claimDir(dir, claimStaleness)
-    try {
-      BucketFs.deleteRecursive(s"$dir/$ManifestFile")
-      BucketFs.deleteRecursive(s"$dir/weights")
+    DsirStore.save(dir, claimStaleness) {
       model.weights.select(col("bucket"), col("wq_q4"))
         .write.mode("overwrite").parquet(s"$dir/weights")
-      GenerationLock.verify(claim) // re-assert right before the commit
-      commit(dir, List(
-        "model_type" -> JString("dsir"),
-        "buckets" -> JInt(model.buckets)))
-    } finally GenerationLock.release(claim)
+      List("model_type" -> JString("dsir"), "buckets" -> JInt(model.buckets))
+    }
   }
 
   /** Load DSIR weights; the bucket modulus rides in the manifest so
     * scoring can never hash with a different bucket space. */
   def loadDsir(spark: SparkSession, dir: String): DsirWeights = {
-    val mf = manifest(dir, "dsir")
     DsirWeights(spark.read.parquet(s"$dir/weights"),
-      long(mf, "buckets").toInt)
+      DsirStore.read(dir).int("buckets"))
   }
 }

@@ -54,6 +54,39 @@ class BucketSpec extends AnyFunSuite {
     assert(pr.agg(max($"distance")).as[Double].head() <= 500e3)
   }
 
+  // a 2° point grid over the whole globe in 30° cells, for radius reads
+  // checked against a brute-force geodesic filter over every row
+  private lazy val globe: (String, Array[(Int, Double, Double)]) = {
+    val dir = tmpDir("bucket_globe")
+    val grid = (for { i <- 0 until 180; j <- 0 until 90 }
+      yield (i * 90 + j, -179.0 + 2 * i, -89.0 + 2 * j)).toDF("id", "lon", "lat")
+    BucketWriter.writeBucket(grid, dir, LonLatPartitioning(size = (30, 30)),
+      mode = "overwrite")
+    (dir, grid.as[(Int, Double, Double)].collect())
+  }
+
+  private def assertRadiusExact(lon: Double, lat: Double, d: Double): Unit = {
+    val (dir, pts) = globe
+    val expect = pts.collect {
+      case (id, x, y) if graft.functions.Geodesic.inverse(x, y, lon, lat) <= d => id
+    }.toSet
+    val got = BucketReader.read(spark, dir,
+        BucketReader.AroundPoint(lon, lat, distance = d))
+      .select("id").as[Int].collect().toSet
+    assert(expect.nonEmpty && got == expect,
+      s"($lon, $lat, $d m): missing ${expect -- got}, extra ${got -- expect}")
+  }
+
+  test("radius read across the antimeridian returns the brute-force rows") {
+    // reaches lon -176 on the far side
+    assertRadiusExact(179.0, 10.0, 500e3)
+  }
+
+  test("radius read over a pole returns the brute-force rows") {
+    // 1,000 km from (0, 85) reaches (179, 89), 667 km away over the pole
+    assertRadiusExact(0.0, 85.0, 1000e3)
+  }
+
   test("merge: period-named consolidated files + update mode (S12/T8)") {
     val src = tmpDir("src")
     val dst = tmpDir("dst")
