@@ -47,15 +47,29 @@ quiet_wait() { # $1 step: wait up to 10 min for 1-min loadavg < 2.0
   done
 }
 
+# A step whose log — or whose artifact listed here — is missing, empty or
+# older than the step records <name>_RC=EMPTY_ARTIFACT and fails, whatever
+# the command's exit code: an empty artifact is never a result.
+declare -A ARTIFACT=([BENCH]=BENCH_OUT.json)
 step() { # $1 name; remaining args = command
   local name=$1; shift
+  local artifact=${ARTIFACT[$name]:-}
   if ! quiet_wait "$name"; then
     echo "${name}_RC=INVALID_ENTRY_BRACKET $(date -u +%H:%M:%S)" >> "$STATUS"
     return 1
   fi
-  "$@" > "/tmp/${name}_r21.log" 2>&1
+  local log="/tmp/${name}_r21.log" start="/tmp/${name}_r21.start"
+  touch -d "1 second ago" "$start"
+  "$@" > "$log" 2>&1
   local rc=$?
   bracket "$name" exit
+  local f
+  for f in "$log" $artifact; do
+    if [ ! -s "$f" ] || [ ! "$f" -nt "$start" ]; then
+      echo "${name}_RC=EMPTY_ARTIFACT ($f, exit $rc) $(date -u +%H:%M:%S)" >> "$STATUS"
+      return 1
+    fi
+  done
   echo "${name}_RC=$rc $(date -u +%H:%M:%S)" >> "$STATUS"
   return $rc
 }

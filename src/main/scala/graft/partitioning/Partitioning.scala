@@ -114,8 +114,10 @@ object Binning {
   * arrays) exposing executor-side Column builders; the Spark analogue of
   * the reference's Base2DPartitioning (satbucket/partitioning.py:366-823).
   *
-  * `flavor`: "hive" → `level=label/` directory names (Spark-native
-  * partitionBy layout); null/"directory" → bare `label/` names.
+  * `flavor`: "directory" → bare `label/` directory names; "hive" or unset
+  * → `level=label/` names (Spark-native partitionBy layout). The
+  * reference's null flavor maps to "directory" when its manifest is read
+  * (BucketInfo).
   */
 sealed trait Partitioning2D extends Serializable {
   def extent: Extent
@@ -330,11 +332,20 @@ sealed trait Partitioning2D extends Serializable {
   def directoriesForCells(cells: Seq[(Int, Int)]): Seq[String] =
     cells.map { case (i, j) => directoryOf(i, j) }
 
-  def directoryOf(i: Int, j: Int): String = {
-    val byLevel = levels.zip(labelsOfIndices(i, j)).toMap
+  def directoryOf(i: Int, j: Int): String =
+    directoryOfLabels(levels.zip(labelsOfIndices(i, j)).toMap)
+
+  /** Relative directory of the cell whose level → label values are
+    * given, in `order`: `level=label` components (label escaped as Spark's
+    * `partitionBy` escapes it) unless the flavor is "directory", then bare
+    * `label` components. The one place the on-disk cell layout is decided:
+    * readers prune with it and every bucket writer lifts its staged output
+    * through it. */
+  def directoryOfLabels(labels: Map[String, String]): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    val bare = flavor.contains("directory")
     order.map { lvl =>
-      val lab = byLevel(lvl)
-      if (flavor.contains("hive")) s"$lvl=$lab" else lab
+      if (bare) labels(lvl) else s"$lvl=${escapePathName(labels(lvl))}"
     }.mkString("/")
   }
 
@@ -717,5 +728,19 @@ object GeoExtent {
         math.max(lon - sizeDeg / 2, -180), math.min(lon + sizeDeg / 2, 180),
         math.max(lat - sizeDeg / 2, -90), math.min(lat + sizeDeg / 2, 90))
     }
+  }
+
+  /** The `sizeDeg`-wide box around a point without the clamp at ±180°: a
+    * box crossing the antimeridian comes back as two extents, one on each
+    * side, and a box 360° or wider as the full longitude span. */
+  def boxesAroundPoint(lon: Double, lat: Double, sizeDeg: Double): Seq[Extent] = {
+    val h = sizeDeg / 2
+    val (ymin, ymax) = (math.max(lat - h, -90.0), math.min(lat + h, 90.0))
+    if (sizeDeg >= 360) Seq(Extent(-180, 180, ymin, ymax))
+    else if (lon - h < -180)
+      Seq(Extent(-180, lon + h, ymin, ymax), Extent(lon - h + 360, 180, ymin, ymax))
+    else if (lon + h > 180)
+      Seq(Extent(lon - h, 180, ymin, ymax), Extent(-180, lon + h - 360, ymin, ymax))
+    else Seq(Extent(lon - h, lon + h, ymin, ymax))
   }
 }

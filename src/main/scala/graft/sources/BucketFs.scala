@@ -10,9 +10,9 @@ import scala.collection.parallel.CollectionConverters._
   *
   * Every path is a Hadoop URI: bare `/tmp/x` resolves against
   * `fs.defaultFS` (local `file://` in tests), while `hdfs://` and
-  * `s3a://` paths hit the corresponding store unchanged — the merge
-  * rename pass, granule staging moves, directory-flavor prefix strip,
-  * and recursive listing all work against distributed storage, not just
+  * `s3a://` paths hit the corresponding store unchanged — the staged-file
+  * lift behind every bucket writer (`BucketWriter.liftStaged`, both
+  * flavors) and recursive listing work against distributed storage, not just
   * `java.nio`. (The reference is local-only here, routines.py:791-810;
   * a 100 TB Spark deployment can't be.)
   *

@@ -59,13 +59,18 @@ object BucketReader {
     // the caller's session conf is untouched by this read.
     val rs = graft.core.ReaderSession(spark)
 
-    val resolvedExtent: Option[Extent] = query match {
-      case Everything | ByPolygon(_, _) => None
-      case ByExtent(e, pad) => Some(pad2(e, pad))
-      case ByCountry(n, pad) => Some(NamedExtents.country(n, pad))
-      case ByContinent(n, pad) => Some(NamedExtents.continent(n, pad))
-      case AroundPoint(lon, lat, d, s) => Some(GeoExtent.aroundPoint(lon, lat, d, s))
+    // the query's boxes: pruning keeps the union of their cells. A
+    // sizeDeg box crossing ±180° is two boxes, one on each side.
+    val extents: Seq[Extent] = query match {
+      case Everything | ByPolygon(_, _) => Nil
+      case ByExtent(e, pad) => Seq(pad2(e, pad))
+      case ByCountry(n, pad) => Seq(NamedExtents.country(n, pad))
+      case ByContinent(n, pad) => Seq(NamedExtents.continent(n, pad))
+      case AroundPoint(lon, lat, d, s) if d.isNaN && !s.isNaN =>
+        GeoExtent.boxesAroundPoint(lon, lat, s)
+      case AroundPoint(lon, lat, d, s) => Seq(GeoExtent.aroundPoint(lon, lat, d, s))
     }
+    lazy val prune = extents.map(p.prunePredicate).reduceOption(_ || _)
     // polygons prune per-cell (rect/polygon intersection), not by bbox —
     // a concave query skips the bbox cells it never touches
     val polyCells: Option[Seq[(Int, Int)]] = query match {
@@ -83,7 +88,7 @@ object BucketReader {
         // pathGlobFilter keeps non-parquet bucket files (e.g. the
         // reference's bucket_info.yaml) out of the scan.
         var d = rs.read.option("pathGlobFilter", "*.parquet").parquet(bucketDir)
-        resolvedExtent.foreach(e => d = d.where(p.prunePredicate(e)))
+        prune.foreach(c => d = d.where(c))
         polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
         d
       } else if (isHive) {
@@ -92,17 +97,17 @@ object BucketReader {
         val files = listFiles(bucketDir, fileExtension, globPattern, regexPattern)
         require(files.nonEmpty, s"no files match the filename filters in $bucketDir")
         var d = rs.read.option("basePath", bucketDir).parquet(files: _*)
-        resolvedExtent.foreach(e => d = d.where(p.prunePredicate(e)))
+        prune.foreach(c => d = d.where(c))
         polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
         d
       } else {
         // directory flavor: prune driver-side, rebuild labels from the path
-        val roots = (resolvedExtent, polyCells) match {
-          case (Some(e), _) =>
+        val roots = (extents, polyCells) match {
+          case (es, _) if es.nonEmpty =>
             // parallel exists() — pruned candidates number in the hundreds
             // and sequential RPCs dominate on remote stores
             BucketFs.filterExisting(
-              p.directoriesByExtent(e).map(rel => s"$bucketDir/$rel"))
+              es.flatMap(p.directoriesByExtent).distinct.map(rel => s"$bucketDir/$rel"))
           case (_, Some(cells)) =>
             BucketFs.filterExisting(
               p.directoriesForCells(cells).map(rel => s"$bucketDir/$rel"))
@@ -130,19 +135,14 @@ object BucketReader {
 
     // row-level spatial refinement
     query match {
-      case ByExtent(e, pad) =>
-        df = SpatialFilters.filterByExtent(df, pad2(e, pad), x, y)
-      case ByCountry(n, pad) =>
-        df = SpatialFilters.filterByExtent(df, NamedExtents.country(n, pad), x, y)
-      case ByContinent(n, pad) =>
-        df = SpatialFilters.filterByExtent(df, NamedExtents.continent(n, pad), x, y)
+      case Everything => ()
       case AroundPoint(lon, lat, d, _) if !d.isNaN =>
         df = SpatialFilters.filterAroundPoint(spark, df, lon, lat, d, x, y)
-      case AroundPoint(lon, lat, _, s) if !s.isNaN =>
-        df = SpatialFilters.filterByExtent(df, GeoExtent.aroundPoint(lon, lat, sizeDeg = s), x, y)
       case ByPolygon(vs, _) =>
         df = SpatialFilters.filterByPolygon(df, vs, x, y)
-      case _ => ()
+      case _ => // boxes: extent, country, continent, sizeDeg
+        df = df.where(extents.map(SpatialFilters.extentPredicate(col(x), col(y), _))
+          .reduce(_ || _))
     }
 
     // user predicates (P3) then projection (P1) then limit (P2)

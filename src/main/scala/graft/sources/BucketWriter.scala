@@ -9,13 +9,104 @@ import graft.partitioning.Partitioning2D
   * write_granules_bucket, satbucket/routines.py:66-318, and the sink core
   * satbucket/writers.py).
   *
-  * Spark-native layout decision: buckets are written hive-flavor via
-  * `partitionBy(order)` — Catalyst prunes these directories from label
-  * predicates for free. File sizing maps the reference's "500MB"-style
+  * Layout: every writer writes both flavors, hive (`level=label/` dirs)
+  * and directory (bare `label/` dirs), in any level order. A hive
+  * `writeBucket` is one direct `partitionBy(order)` write. Every other
+  * write — per-granule ingest, merge, and directory-flavor `writeBucket` —
+  * stages Spark's hive-style `partitionBy` output and moves it into the
+  * bucket with [[liftStaged]], the one mapping from staged output to
+  * bucket layout. File sizing maps the reference's "500MB"-style
   * row-group targets onto `maxRecordsPerFile` + `parquet.block.size`
   * estimated from sampled bytes/row (writers.py:95-112).
   */
 object BucketWriter {
+
+  /** Above this many destination directories a [[liftStaged]] pass runs
+    * as a Spark job on executors instead of the driver thread pool. */
+  private[sources] val DistributeRenamesAbove = 1024
+
+  /** Staged partition level carrying merge's temporal period. */
+  private[sources] val PeriodLevel = "__period"
+
+  /** The moves into one destination directory: staged file → new name,
+    * plus the periods whose old `{period}_*` files an update replaces. */
+  private final case class DirMoves(dir: String, periods: Seq[String],
+                                    moves: Seq[(String, String)])
+
+  /** Move a staged `partitionBy(p.order [:+ PeriodLevel])` tree into the
+    * bucket layout — the one staging-to-layout mapping of every writer.
+    *
+    * ONE recursive listing finds the staged parquet files; each file's
+    * `level=value[/__period=P]` directory maps through
+    * `p.directoryOfLabels`. Each destination directory is created once,
+    * then its files move rename-first to `name(period, i, stagedName)`:
+    * `i` counts the staged files of one (directory, period) in path order,
+    * and the period is "" when none was staged. With `update`, each
+    * directory is listed once first and the old `{period}_*` files of its
+    * periods are deleted (reference routines.py:791-810). Past
+    * `distributeAbove` directories the per-directory work runs as one
+    * Spark job instead of on the driver pool, so at 10^5-10^6 staged files
+    * rename throughput scales with the cluster instead of one driver's
+    * metadata RPC budget. Deletes the staging tree; returns the number of
+    * files moved. */
+  private[sources] def liftStaged(spark: SparkSession, staging: String,
+                                  bucketDir: String, p: Partitioning2D,
+                                  name: (String, Int, String) => String,
+                                  update: Boolean = false,
+                                  distributeAbove: Int = DistributeRenamesAbove): Int = {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    val (fs, stagingPath) = BucketFs.resolve(staging)
+    val staged = BucketFs.listFileStatuses(fs, stagingPath).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    val cells = staged.groupBy(_.getParent).toSeq.map { case (dir, files) =>
+      val rel = BucketFs.relativize(fs, stagingPath, dir)
+      val kv = rel.split('/').toSeq.map { c =>
+        val i = c.indexOf('=')
+        require(i > 0, s"staged directory '$rel' is not hive-style")
+        c.take(i) -> unescapePathName(c.drop(i + 1))
+      }
+      require(kv.map(_._1).filter(_ != PeriodLevel) == p.order,
+        s"staged directory '$rel' does not follow the levels ${p.order}")
+      val labels = kv.toMap
+      val period = labels.getOrElse(PeriodLevel, "")
+      val moves = files.sortBy(_.toString).zipWithIndex.map { case (f, i) =>
+        f.toString -> name(period, i, f.getName)
+      }
+      (p.directoryOfLabels(labels), period, moves)
+    }
+    val work = cells.groupBy(_._1).toSeq.map { case (rel, cs) =>
+      DirMoves(new Path(bucketDir, rel).toString, cs.map(_._2), cs.flatMap(_._3))
+    }
+    // function VALUE over serializable locals only, so the executor
+    // closure below serializes
+    val doUpdate = update
+    val handle: (FileSystem, DirMoves) => Unit = (fsx, d) => {
+      val dst = new Path(d.dir)
+      BucketFs.mkdirs(fsx, dst)
+      if (doUpdate) fsx.listStatus(dst).iterator
+        .filter(st => d.periods.exists(q => st.getPath.getName.startsWith(s"${q}_")))
+        .foreach(st => fsx.delete(st.getPath, false))
+      d.moves.foreach { case (src, n) => BucketFs.move(fsx, new Path(src), new Path(dst, n)) }
+    }
+    if (work.size <= distributeAbove) {
+      val par = work.par
+      par.tasksupport = BucketFs.fsTaskSupport
+      par.foreach(handle(fs, _))
+    } else {
+      val confSer = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      val root = stagingPath.toString
+      spark.sparkContext
+        .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism * 4))
+        .foreachPartition { it =>
+          val fsx = new Path(root).getFileSystem(confSer.value)
+          it.foreach(handle(fsx, _))
+        }
+    }
+    BucketFs.deleteRecursive(staging)
+    staged.size
+  }
 
   /** Dynamic-partition write parallelism: 4× cores (see writeBucket). */
   private[sources] def writeTasks(df: DataFrame): Int =
@@ -220,44 +311,38 @@ object BucketWriter {
         }
         repartitioned.sortWithinPartitions((p.order.map(col) :+ key): _*)
       }
+    // hive flavor: one direct write. Directory flavor (bare `label/` dirs,
+    // reference partitioning.py:253-257): Spark only writes hive-style, so
+    // the save mode applies to the bucket here and the rows stage under it
+    val dirFlavor = p.flavor.contains("directory")
+    if (dirFlavor) {
+      val exists = BucketFs.exists(bucketDir)
+      mode.toLowerCase(java.util.Locale.ROOT) match {
+        case "overwrite" => BucketFs.deleteRecursive(bucketDir)
+        case "append" => ()
+        case "ignore" => if (exists) return
+        case "error" | "errorifexists" | "default" =>
+          require(!exists, s"path $bucketDir already exists")
+        case other => throw new IllegalArgumentException(s"unknown save mode '$other'")
+      }
+    }
+    val target = if (dirFlavor) s"$bucketDir/_staging" else bucketDir
     labeled.write
-      .mode(mode)
+      .mode(if (dirFlavor) "overwrite" else mode)
       .partitionBy(p.order: _*)
       .option("compression", compression)
       .options(compressionLevelOptions(compression, compressionLevel))
       .option("maxRecordsPerFile", maxRecords)
       .option("parquet.block.size", parseSize(rowGroupSize))
-      .parquet(bucketDir)
-    // directory flavor (bare `label/` dirs, reference partitioning.py:253-257):
-    // Spark only writes hive-style, so strip the `level=` prefixes after the
-    // write (metadata-only renames)
-    if (p.flavor.contains("directory")) stripHivePrefixes(bucketDir, p.order)
+      .parquet(target)
+    if (dirFlavor)
+      liftStaged(df.sparkSession, target, bucketDir, p, (_, _, staged) => staged)
     // after the data: "overwrite" clears the directory first, which would
     // delete a manifest written up front
     BucketInfo.write(bucketDir, p)
     // optional _metadata/_common_metadata sidecars (reference default off:
     // "can take much longer", routines.py:588-599)
     if (writeMetadata) DatasetMetadata.write(bucketDir)
-  }
-
-  private def stripHivePrefixes(bucketDir: String, order: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val (fs, root) = BucketFs.resolve(bucketDir)
-    def renameLevel(dir: Path, levels: Seq[String]): Unit =
-      levels match {
-        case Nil => ()
-        case level +: rest =>
-          val subs = fs.listStatus(dir)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith(s"$level=")).toSeq
-          subs.foreach { st =>
-            val bare = st.getPath.getName.stripPrefix(s"$level=")
-            val dst = new Path(dir, bare)
-            BucketFs.move(fs, st.getPath, dst)
-            renameLevel(dst, rest)
-          }
-      }
-    renameLevel(root, order)
   }
 
   /** User extension point: filepath → rows (reference granule_to_df_func,
@@ -315,10 +400,11 @@ object BucketWriter {
   /** Per-granule fan-out ETL (reference write_granules_bucket,
     * routines.py:143-250): driver-parallel loop, per-file error capture,
     * collision-free append via per-granule filename prefixes — each granule
-    * writes to its own staging dir, then its files move into the bucket as
-    * `{granule}_{i}.parquet` (concurrent Spark jobs appending to one path
-    * share committer staging and can clobber each other, so direct append
-    * is NOT safe here; distinct staging dirs + atomic moves are).
+    * writes to its own staging dir, then [[liftStaged]] moves its files
+    * into the bucket as `{granule}_{i}.parquet` (concurrent Spark jobs
+    * appending to one path share committer staging and can clobber each
+    * other, so direct append is NOT safe here; distinct staging dirs +
+    * atomic moves are).
     *
     * Returns (path, error) for each failed granule — failures don't abort
     * the run, matching the reference's error-capture contract.
@@ -329,44 +415,29 @@ object BucketWriter {
                           x: String = "lon", y: String = "lat",
                           parallelism: Int = 4,
                           rowGroupSize: String = "500MB"): Seq[(String, String)] = {
-    import org.apache.hadoop.fs.Path
     BucketInfo.write(bucketDir, p)
-    val par = filepaths.par
-    par.tasksupport = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(parallelism))
-    val results = par.flatMap { path =>
-      Try {
-        reader.read(spark, path).foreach { df =>
-          val granuleBase = path.split('/').last.replaceAll("[^A-Za-z0-9._-]", "_")
-          val staging = s"$bucketDir/_staging_$granuleBase"
-          val labeled = p.addLabels(df, x, y, removeInvalidRows = true)
-          labeled.write
-            .mode("overwrite")
-            .partitionBy(p.order: _*)
-            .option("compression", "snappy")
-            .option("parquet.block.size", parseSize(rowGroupSize))
-            .parquet(staging)
-          // move part files up as {granule}_{i}.parquet per partition dir
-          // (Hadoop FS: staging + bucket may live on hdfs:// / s3a://)
-          val (fs, stagingPath) = BucketFs.resolve(staging)
-          val parts = BucketFs.listFileStatuses(fs, stagingPath)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath).sortBy(_.toString)
-          parts.groupBy(_.getParent).foreach { case (dir, files) =>
-            val rel = BucketFs.relativize(fs, stagingPath, dir)
-            val dst = if (rel.isEmpty) new Path(bucketDir) else new Path(bucketDir, rel)
-            BucketFs.mkdirs(fs, dst)
-            files.zipWithIndex.foreach { case (f, i) =>
-              BucketFs.move(fs, f, new Path(dst, s"${granuleBase}_$i.parquet"))
-            }
+    val pool = new java.util.concurrent.ForkJoinPool(parallelism)
+    try {
+      val par = filepaths.par
+      par.tasksupport = new scala.collection.parallel.ForkJoinTaskSupport(pool)
+      par.flatMap { path =>
+        Try {
+          reader.read(spark, path).foreach { df =>
+            val granuleBase = path.split('/').last.replaceAll("[^A-Za-z0-9._-]", "_")
+            val staging = s"$bucketDir/_staging_$granuleBase"
+            p.addLabels(df, x, y, removeInvalidRows = true).write
+              .mode("overwrite")
+              .partitionBy(p.order: _*)
+              .option("compression", "snappy")
+              .option("parquet.block.size", parseSize(rowGroupSize))
+              .parquet(staging)
+            liftStaged(spark, staging, bucketDir, p, (_, i, _) => s"${granuleBase}_$i.parquet")
           }
-          BucketFs.deleteRecursive(staging)
+        } match {
+          case Success(_) => None
+          case Failure(e) => Some(path -> String.valueOf(e.getMessage))
         }
-      } match {
-        case Success(_) => None
-        case Failure(e) => Some(path -> String.valueOf(e.getMessage))
-      }
-    }.seq.toSeq
-    results
+      }.seq.toSeq
+    } finally pool.shutdown()
   }
 }

@@ -1,10 +1,9 @@
 package graft.sources
 
 import java.time.LocalDateTime
-import scala.collection.parallel.CollectionConverters._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import BucketWriter.PeriodLevel
 
 /** Bucket compaction (reference merge_granule_buckets,
   * satbucket/routines.py:529-852): consolidate the many small per-granule
@@ -14,19 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark-native design (SURVEY §7 decision 4): ONE distributed job writes
   * the whole archive — `read(src) → filter(time) → write dst partitioned by
-  * (spatial levels, __period)` — then a driver-side metadata pass renames
+  * (spatial levels, __period)` into a staging dir — then the shared
+  * staged-file lift (`BucketWriter.liftStaged`, both flavors) renames
   * `__period=P/part-*.parquet` up into the spatial directory as
   * `P_{i}.parquet`. No per-partition driver loop (the reference iterates
   * spatial partitions sequentially, :751); at 100 TB this is the difference
   * between one shuffle-free scan and 10⁴ sequential jobs.
   */
 object Merge {
-
-  private val PeriodCol = "__period"
-
-  /** Above this many period-dirs the rename pass runs as a Spark job on
-    * executors instead of a driver thread pool. */
-  private val DistributeRenamesAbove = 1024
 
   def mergeGranuleBuckets(spark: SparkSession,
                           srcBucketDir: String, dstBucketDir: String,
@@ -40,7 +34,7 @@ object Merge {
                           compressionLevel: Option[Int] = None,
                           timeColumn: String = "time",
                           writeMetadata: Boolean = false,
-                          distributeRenamesAbove: Int = DistributeRenamesAbove,
+                          distributeRenamesAbove: Int = BucketWriter.DistributeRenamesAbove,
                           claimStaleness: Long =
                             GenerationLock.DefaultStalenessMs): Unit = {
     Temporal.check(temporalPartitioning)
@@ -77,7 +71,7 @@ object Merge {
     startTime.foreach(s => df = df.where(col(timeColumn) >= lit(java.sql.Timestamp.valueOf(s))))
     endTime.foreach(e => df = df.where(col(timeColumn) < lit(java.sql.Timestamp.valueOf(e))))
 
-    val withPeriod = df.withColumn(PeriodCol,
+    val withPeriod = df.withColumn(PeriodLevel,
       Temporal.timePrefixCol(col(timeColumn), temporalPartitioning))
 
     val maxRecords = BucketWriter.estimateRowsForSize(df, BucketWriter.parseSize(maxFileSize))
@@ -89,97 +83,30 @@ object Merge {
     // auto-salted over ceil(rows/maxRecords) tasks (the probe prunes to
     // the partition-label + time columns; see skewAwareRepartition)
     val repartitioned = BucketWriter.skewAwareRepartition(
-      withPeriod, p.order :+ PeriodCol, maxRecords, autoSaltSkew = true,
+      withPeriod, p.order :+ PeriodLevel, maxRecords, autoSaltSkew = true,
       maxFileBytes = BucketWriter.parseSize(maxFileSize))
     repartitioned.write
       .mode("overwrite")
-      .partitionBy((p.order :+ PeriodCol): _*)
+      .partitionBy((p.order :+ PeriodLevel): _*)
       .option("compression", compression)
       .options(BucketWriter.compressionLevelOptions(compression, compressionLevel))
       .option("maxRecordsPerFile", maxRecords)
       .option("parquet.block.size", BucketWriter.parseSize(rowGroupSize))
       .parquet(staging)
 
-    // metadata pass: lift __period=P/part-i.parquet → <spatial dir>/P_i.parquet.
-    // Hadoop FS throughout (works on hdfs:// / s3a://, see BucketFs docs):
-    // ONE recursive listing discovers every staged file, then renames run
-    // parallel per period-dir (at 10^4 dirs a sequential loop dominates).
-    val (fs, stagingPath) = BucketFs.resolve(staging)
-    val staged = BucketFs.listFileStatuses(fs, stagingPath)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val byPeriodDir = staged.map(_.getPath).groupBy(_.getParent)
-      .filter { case (dir, _) => dir.getName.startsWith(s"$PeriodCol=") }
-      .toSeq
-    val touchedPrefixes =
-      byPeriodDir.map(_._1.getName.stripPrefix(s"$PeriodCol=")).toSet
     // ownership re-assert before the destructive pass (update deletes +
     // renames into live period dirs): a falsely stale-swept claim aborts
     // here, with only the staging dir written — nothing destroyed
     GenerationLock.verify(claim)
-
-    // one task = one period-dir: update-deletes, mkdirs, renames. Small
-    // merges run on the driver (16-way, no job overhead); past
-    // DistributeRenamesAbove dirs the same closure runs as a Spark job so
-    // rename throughput scales with the cluster instead of one driver's
-    // metadata RPC budget — at 10^5-10^6 staged files this is the
-    // difference between minutes and a driver-bound hour on a real store.
-    // function VALUE over serializable locals only (a local `def` would
-    // lift onto Merge$ and make the executor closure unserializable)
-    val periodPrefix = s"$PeriodCol="
-    val dstRoot = dstBucketDir
-    val doUpdate = update
-    // directory flavor: the staging write is always hive-style
-    // (partitionBy), so the spatial path components carry `level=` —
-    // strip them during the lift so the destination keeps the bucket's
-    // declared bare-label layout
-    val stripHiveKeys = p.flavor.contains("directory")
-    val handleDir: (org.apache.hadoop.fs.FileSystem, Path, Path, Seq[Path]) => Unit =
-      (fsx, stagingP, dir, files) => {
-        val prefix = dir.getName.stripPrefix(periodPrefix)
-        val rel0 = BucketFs.relativize(fsx, stagingP, dir.getParent) // spatial path
-        val rel =
-          if (!stripHiveKeys) rel0
-          else rel0.split('/').map { c =>
-            val i = c.indexOf('='); if (i < 0) c else c.substring(i + 1)
-          }.mkString("/")
-        val dstDir = if (rel.isEmpty) new Path(dstRoot) else new Path(dstRoot, rel)
-        BucketFs.mkdirs(fsx, dstDir)
-        if (doUpdate) {
-          // replace exactly the files of this period (reference :791-810)
-          fsx.listStatus(dstDir).iterator
-            .filter(_.getPath.getName.startsWith(s"${prefix}_"))
-            .foreach(st => fsx.delete(st.getPath, false))
-        }
-        files.sortBy(_.toString).zipWithIndex.foreach { case (f, i) =>
-          BucketFs.move(fsx, f, new Path(dstDir, s"${prefix}_$i.parquet"))
-        }
-      }
-    if (byPeriodDir.size <= distributeRenamesAbove) {
-      val periodDirs = byPeriodDir.par
-      periodDirs.tasksupport = BucketFs.fsTaskSupport
-      periodDirs.foreach { case (dir, files) => handleDir(fs, stagingPath, dir, files) }
-    } else {
-      val confSer = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val stagingStr = stagingPath.toString
-      val work = byPeriodDir.map { case (d, fl) => (d.toString, fl.map(_.toString)) }
-      spark.sparkContext
-        .parallelize(work, math.min(work.size,
-          spark.sparkContext.defaultParallelism * 4))
-        .foreachPartition { it =>
-          val stagingP = new Path(stagingStr)
-          val fsx = stagingP.getFileSystem(confSer.value)
-          it.foreach { case (d, fl) =>
-            handleDir(fsx, stagingP, new Path(d), fl.map(new Path(_)))
-          }
-        }
-    }
-    BucketFs.deleteRecursive(staging)
+    // lift __period=P/part-*.parquet → <spatial dir>/P_{i}.parquet, both
+    // flavors (BucketWriter.liftStaged)
+    val moved = BucketWriter.liftStaged(spark, staging, dstBucketDir, p,
+      (period, i, _) => s"${period}_$i.parquet", update, distributeRenamesAbove)
     if (!update || !BucketFs.exists(s"$dstBucketDir/${BucketInfo.FileName}")) {
       BucketInfo.write(dstBucketDir, p, Some(temporalPartitioning))
     }
     if (writeMetadata) DatasetMetadata.write(dstBucketDir)
-    require(touchedPrefixes.nonEmpty || startTime.nonEmpty || endTime.nonEmpty,
+    require(moved > 0 || startTime.nonEmpty || endTime.nonEmpty,
       "merge produced no output files — is the source bucket empty?")
     } finally GenerationLock.release(claim)
   }

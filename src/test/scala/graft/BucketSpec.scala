@@ -87,6 +87,18 @@ class BucketSpec extends AnyFunSuite {
     assertRadiusExact(0.0, 85.0, 1000e3)
   }
 
+  test("sizeDeg box read across the antimeridian returns the rows on both sides") {
+    val dir = tmpDir("bucket_sizedeg")
+    val pts = Seq((1, 178.0, 10.0), (2, -179.0, 10.0), (3, -170.0, 10.0))
+    BucketWriter.writeBucket(pts.toDF("id", "lon", "lat"), dir,
+      LonLatPartitioning(size = (10, 10)), mode = "overwrite")
+    // the 6° box around (179, 10) spans lon 176..180 and -180..-178
+    val got = BucketReader.read(spark, dir,
+        BucketReader.AroundPoint(179.0, 10.0, sizeDeg = 6.0))
+      .select("id").as[Int].collect().toSet
+    assert(got == Set(1, 2))
+  }
+
   test("merge: period-named consolidated files + update mode (S12/T8)") {
     val src = tmpDir("src")
     val dst = tmpDir("dst")
