@@ -576,11 +576,14 @@ class LonLatPartitioning(
   override def crs: String = "EPSG:4326"
 
   /** Partitions within `distance` meters (or a `sizeDeg`-wide box) of a
-    * point — geographic extent math, then extent pruning. */
+    * point — geographic extent math, then extent pruning; the labels of a
+    * box split at ±180° are the union over its two sides, which share one
+    * latitude span. */
   def partitionsAroundPoint(lon: Double, lat: Double,
                             distance: Double = Double.NaN,
                             sizeDeg: Double = Double.NaN): Map[String, Seq[String]] =
-    partitionsByExtent(GeoExtent.aroundPoint(lon, lat, distance, sizeDeg))
+    GeoExtent.boxesAroundPoint(lon, lat, distance, sizeDeg).map(partitionsByExtent)
+      .reduce((a, b) => a.map { case (lvl, labs) => lvl -> (labs ++ b(lvl)).distinct })
 }
 
 object LonLatPartitioning {
@@ -704,14 +707,18 @@ object TilePartitioning {
 object GeoExtent {
   private val EarthRadiusM = 6371008.8
 
-  def aroundPoint(lon: Double, lat: Double,
-                  distance: Double = Double.NaN,
-                  sizeDeg: Double = Double.NaN): Extent = {
+  /** The boxes within `distance` meters, or the `sizeDeg`-wide box,
+    * around a point. One Extent cannot wrap: a `sizeDeg` box crossing ±180°
+    * comes back as two extents, one on each side (one full-longitude box
+    * from 360° up), and a `distance` box crossing ±180° widens to the full
+    * longitude span. */
+  def boxesAroundPoint(lon: Double, lat: Double,
+                       distance: Double = Double.NaN,
+                       sizeDeg: Double = Double.NaN): Seq[Extent] = {
     if (!distance.isNaN) {
       // exact bounding box of the spherical cap of angular radius δ: a cap
       // reaching a pole spans every longitude, otherwise its half-width is
-      // asin(sin δ / cos lat). One Extent cannot wrap, so a box crossing
-      // ±180° widens to the full longitude span.
+      // asin(sin δ / cos lat)
       val delta = distance / EarthRadiusM
       val dLat = math.toDegrees(delta) * 1.02
       val dLon =
@@ -721,26 +728,26 @@ object GeoExtent {
       val (xmin, xmax) =
         if (lon - dLon < -180 || lon + dLon > 180) (-180.0, 180.0)
         else (lon - dLon, lon + dLon)
-      Extent(xmin, xmax, math.max(lat - dLat, -90), math.min(lat + dLat, 90))
+      Seq(Extent(xmin, xmax, math.max(lat - dLat, -90), math.min(lat + dLat, 90)))
     } else {
       require(!sizeDeg.isNaN, "provide distance (m) or sizeDeg (degrees)")
-      Extent(
-        math.max(lon - sizeDeg / 2, -180), math.min(lon + sizeDeg / 2, 180),
-        math.max(lat - sizeDeg / 2, -90), math.min(lat + sizeDeg / 2, 90))
+      val h = sizeDeg / 2
+      val (ymin, ymax) = (math.max(lat - h, -90.0), math.min(lat + h, 90.0))
+      if (sizeDeg >= 360) Seq(Extent(-180, 180, ymin, ymax))
+      else if (lon - h < -180)
+        Seq(Extent(-180, lon + h, ymin, ymax), Extent(lon - h + 360, 180, ymin, ymax))
+      else if (lon + h > 180)
+        Seq(Extent(lon - h, 180, ymin, ymax), Extent(-180, lon + h - 360, ymin, ymax))
+      else Seq(Extent(lon - h, lon + h, ymin, ymax))
     }
   }
 
-  /** The `sizeDeg`-wide box around a point without the clamp at ±180°: a
-    * box crossing the antimeridian comes back as two extents, one on each
-    * side, and a box 360° or wider as the full longitude span. */
-  def boxesAroundPoint(lon: Double, lat: Double, sizeDeg: Double): Seq[Extent] = {
-    val h = sizeDeg / 2
-    val (ymin, ymax) = (math.max(lat - h, -90.0), math.min(lat + h, 90.0))
-    if (sizeDeg >= 360) Seq(Extent(-180, 180, ymin, ymax))
-    else if (lon - h < -180)
-      Seq(Extent(-180, lon + h, ymin, ymax), Extent(lon - h + 360, 180, ymin, ymax))
-    else if (lon + h > 180)
-      Seq(Extent(lon - h, 180, ymin, ymax), Extent(-180, lon + h - 360, ymin, ymax))
-    else Seq(Extent(lon - h, lon + h, ymin, ymax))
+  /** One extent covering [[boxesAroundPoint]]: a box split at ±180°
+    * widens to the full longitude span. */
+  def aroundPoint(lon: Double, lat: Double,
+                  distance: Double = Double.NaN,
+                  sizeDeg: Double = Double.NaN): Extent = {
+    val bs = boxesAroundPoint(lon, lat, distance, sizeDeg)
+    Extent(bs.map(_.xmin).min, bs.map(_.xmax).max, bs.map(_.ymin).min, bs.map(_.ymax).max)
   }
 }

@@ -66,9 +66,7 @@ object BucketReader {
       case ByExtent(e, pad) => Seq(pad2(e, pad))
       case ByCountry(n, pad) => Seq(NamedExtents.country(n, pad))
       case ByContinent(n, pad) => Seq(NamedExtents.continent(n, pad))
-      case AroundPoint(lon, lat, d, s) if d.isNaN && !s.isNaN =>
-        GeoExtent.boxesAroundPoint(lon, lat, s)
-      case AroundPoint(lon, lat, d, s) => Seq(GeoExtent.aroundPoint(lon, lat, d, s))
+      case AroundPoint(lon, lat, d, s) => GeoExtent.boxesAroundPoint(lon, lat, d, s)
     }
     lazy val prune = extents.map(p.prunePredicate).reduceOption(_ || _)
     // polygons prune per-cell (rect/polygon intersection), not by bbox —

@@ -21,34 +21,29 @@ import graft.partitioning.Partitioning2D
   */
 object BucketWriter {
 
-  /** Above this many destination directories a [[liftStaged]] pass runs
-    * as a Spark job on executors instead of the driver thread pool. */
+  /** Above this many staged (directory, period) units a [[liftStaged]]
+    * pass runs as a Spark job on executors instead of the driver thread
+    * pool. */
   private[sources] val DistributeRenamesAbove = 1024
 
   /** Staged partition level carrying merge's temporal period. */
   private[sources] val PeriodLevel = "__period"
 
-  /** The moves into one destination directory: staged file → new name,
-    * plus the periods whose old `{period}_*` files an update replaces. */
-  private final case class DirMoves(dir: String, periods: Seq[String],
-                                    moves: Seq[(String, String)])
-
   /** Move a staged `partitionBy(p.order [:+ PeriodLevel])` tree into the
     * bucket layout — the one staging-to-layout mapping of every writer.
     *
-    * ONE recursive listing finds the staged parquet files; each file's
-    * `level=value[/__period=P]` directory maps through
-    * `p.directoryOfLabels`. Each destination directory is created once,
-    * then its files move rename-first to `name(period, i, stagedName)`:
-    * `i` counts the staged files of one (directory, period) in path order,
-    * and the period is "" when none was staged. With `update`, each
-    * directory is listed once first and the old `{period}_*` files of its
-    * periods are deleted (reference routines.py:791-810). Past
-    * `distributeAbove` directories the per-directory work runs as one
-    * Spark job instead of on the driver pool, so at 10^5-10^6 staged files
-    * rename throughput scales with the cluster instead of one driver's
-    * metadata RPC budget. Deletes the staging tree; returns the number of
-    * files moved. */
+    * ONE recursive listing finds the staged parquet files; each staged
+    * `level=value[/__period=P]` directory is one unit of work, mapped to
+    * its destination through `p.directoryOfLabels`. A unit creates its
+    * destination directory, then moves its files rename-first to
+    * `name(period, i, stagedName)`: `i` counts the unit's files in path
+    * order, and the period is "" when none was staged. With `update`, a
+    * unit first lists its directory and deletes the old files of its
+    * period, `{period}_*` (reference routines.py:791-810). Past
+    * `distributeAbove` units the work runs as one Spark job instead of on
+    * the driver pool, so at 10^5-10^6 staged files rename throughput
+    * scales with the cluster instead of one driver's metadata RPC budget.
+    * Deletes the staging tree; returns the number of files moved. */
   private[sources] def liftStaged(spark: SparkSession, staging: String,
                                   bucketDir: String, p: Partitioning2D,
                                   name: (String, Int, String) => String,
@@ -59,7 +54,8 @@ object BucketWriter {
     val (fs, stagingPath) = BucketFs.resolve(staging)
     val staged = BucketFs.listFileStatuses(fs, stagingPath).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
-    val cells = staged.groupBy(_.getParent).toSeq.map { case (dir, files) =>
+    // (destination dir, period, staged file → new name) per staged dir
+    val work = staged.groupBy(_.getParent).toSeq.map { case (dir, files) =>
       val rel = BucketFs.relativize(fs, stagingPath, dir)
       val kv = rel.split('/').toSeq.map { c =>
         val i = c.indexOf('=')
@@ -73,21 +69,19 @@ object BucketWriter {
       val moves = files.sortBy(_.toString).zipWithIndex.map { case (f, i) =>
         f.toString -> name(period, i, f.getName)
       }
-      (p.directoryOfLabels(labels), period, moves)
-    }
-    val work = cells.groupBy(_._1).toSeq.map { case (rel, cs) =>
-      DirMoves(new Path(bucketDir, rel).toString, cs.map(_._2), cs.flatMap(_._3))
+      (new Path(bucketDir, p.directoryOfLabels(labels)).toString, period, moves)
     }
     // function VALUE over serializable locals only, so the executor
     // closure below serializes
     val doUpdate = update
-    val handle: (FileSystem, DirMoves) => Unit = (fsx, d) => {
-      val dst = new Path(d.dir)
-      BucketFs.mkdirs(fsx, dst)
-      if (doUpdate) fsx.listStatus(dst).iterator
-        .filter(st => d.periods.exists(q => st.getPath.getName.startsWith(s"${q}_")))
-        .foreach(st => fsx.delete(st.getPath, false))
-      d.moves.foreach { case (src, n) => BucketFs.move(fsx, new Path(src), new Path(dst, n)) }
+    val handle: (FileSystem, (String, String, Seq[(String, String)])) => Unit = {
+      case (fsx, (dir, period, moves)) =>
+        val dst = new Path(dir)
+        BucketFs.mkdirs(fsx, dst)
+        if (doUpdate) fsx.listStatus(dst).iterator
+          .filter(_.getPath.getName.startsWith(s"${period}_"))
+          .foreach(st => fsx.delete(st.getPath, false))
+        moves.foreach { case (src, n) => BucketFs.move(fsx, new Path(src), new Path(dst, n)) }
     }
     if (work.size <= distributeAbove) {
       val par = work.par
@@ -313,7 +307,8 @@ object BucketWriter {
       }
     // hive flavor: one direct write. Directory flavor (bare `label/` dirs,
     // reference partitioning.py:253-257): Spark only writes hive-style, so
-    // the save mode applies to the bucket here and the rows stage under it
+    // the save mode applies to the bucket here and the rows stage under a
+    // name of their own — concurrent appends and merges never share it
     val dirFlavor = p.flavor.contains("directory")
     if (dirFlavor) {
       val exists = BucketFs.exists(bucketDir)
@@ -326,7 +321,7 @@ object BucketWriter {
         case other => throw new IllegalArgumentException(s"unknown save mode '$other'")
       }
     }
-    val target = if (dirFlavor) s"$bucketDir/_staging" else bucketDir
+    val target = if (dirFlavor) s"$bucketDir/_staging_${java.util.UUID.randomUUID}" else bucketDir
     labeled.write
       .mode(if (dirFlavor) "overwrite" else mode)
       .partitionBy(p.order: _*)
@@ -431,7 +426,10 @@ object BucketWriter {
               .option("compression", "snappy")
               .option("parquet.block.size", parseSize(rowGroupSize))
               .parquet(staging)
-            liftStaged(spark, staging, bucketDir, p, (_, i, _) => s"${granuleBase}_$i.parquet")
+            // on the driver pool whatever the cell count: one granule's
+            // moves are too few to repay a Spark job each
+            liftStaged(spark, staging, bucketDir, p, (_, i, _) => s"${granuleBase}_$i.parquet",
+              distributeAbove = Int.MaxValue)
           }
         } match {
           case Success(_) => None

@@ -186,6 +186,18 @@ class PartitioningSpec extends AnyFunSuite {
     assert(dirs == Seq("lon_bin=5.0/lat_bin=5.0"))
   }
 
+  test("partitionsAroundPoint: a sizeDeg box across ±180° keeps both sides") {
+    val p = LonLatPartitioning(size = (10, 10))
+    // the 6° box around (179, 10) spans lon 176..180 and -180..-178
+    val dict = p.partitionsAroundPoint(179.0, 10.0, sizeDeg = 6.0)
+    assert(dict("lon_bin").toSet == Set("175.0", "-175.0"))
+    assert(dict("lat_bin").toSet == Set("5.0", "15.0"))
+    assert(p.partitionsAroundPoint(5.0, 10.0, sizeDeg = 6.0)("lon_bin") == Seq("5.0"))
+    // the single covering extent widens a split box to every longitude
+    assert(GeoExtent.aroundPoint(179.0, 10.0, sizeDeg = 6.0) == Extent(-180, 180, 7, 13))
+    assert(GeoExtent.aroundPoint(5.0, 10.0, sizeDeg = 6.0) == Extent(2, 8, 7, 13))
+  }
+
   test("manifest to_dict round trip") {
     val p = LonLatPartitioning(size = (4, 4), labelsDecimals = Some((0, 0)))
     val d = p.toDict
