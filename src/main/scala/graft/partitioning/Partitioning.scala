@@ -262,24 +262,17 @@ sealed trait Partitioning2D extends Serializable {
     * for 1-level tile ids it is the exact id list. */
   def partitionsByExtent(queryExtent: Extent): Map[String, Seq[String]]
 
-  /** Catalyst pruning predicate over the partition label columns: Catalyst
-    * turns `level.isin(labels)` into directory-level partition pruning. */
-  def prunePredicate(queryExtent: Extent): Column = {
-    val dict = partitionsByExtent(queryExtent)
-    dict.map { case (level, labels) =>
-      col(level).isin(labels: _*)
-    }.reduce(_ && _)
+  /** (i, j) cells intersecting `queryExtent`: the cross product of
+    * [[partitionIndicesByExtent]]. */
+  def cellsByExtent(queryExtent: Extent): Seq[(Int, Int)] = {
+    val (xs, ys) = partitionIndicesByExtent(queryExtent)
+    for { j <- ys.toSeq; i <- xs.toSeq } yield (i, j)
   }
 
   /** Directory trees (relative) for the labels dict, obeying order+flavor
     * (reference _directories / get_directories, :253-272). */
-  def directoriesByExtent(queryExtent: Extent): Seq[String] = {
-    val (xs, ys) = partitionIndicesByExtent(queryExtent)
-    for {
-      j <- ys.toSeq
-      i <- xs.toSeq
-    } yield directoryOf(i, j)
-  }
+  def directoriesByExtent(queryExtent: Extent): Seq[String] =
+    directoriesForCells(cellsByExtent(queryExtent))
 
   /** Exact (i, j) cell list whose rectangle intersects the polygon: the
     * bbox candidate set refined by a per-cell rectangle/polygon
@@ -307,15 +300,15 @@ sealed trait Partitioning2D extends Serializable {
     } yield (i, j)
   }
 
-  /** Catalyst pruning predicate selecting EXACTLY the given cells — unlike
-    * [[prunePredicate]]'s per-axis `isin` cross-product, non-rectangular
-    * cell sets (polygon queries) stay non-rectangular. Grouped by
-    * first-level label so the predicate is O(distinct x-labels) OR terms,
-    * each with one `isin`; Catalyst evaluates it against partition-column
-    * values only, so directory pruning still applies. */
+  /** Label predicate selecting EXACTLY the given cells — non-rectangular
+    * cell sets (polygon queries, boxes split at ±180°) stay
+    * non-rectangular, and no cells select nothing. Grouped by first-level
+    * label so the predicate is O(distinct x-labels) OR terms, each with
+    * one `isin`; on hive partition columns Catalyst evaluates it against
+    * partition values only, so directory pruning still applies. */
   def prunePredicateForCells(cells: Seq[(Int, Int)]): Column = {
-    require(cells.nonEmpty, "no partitions intersect the query polygon")
-    if (nLevels == 1) {
+    if (cells.isEmpty) lit(false)
+    else if (nLevels == 1) {
       val labs = cells.map { case (i, j) => labelsOfIndices(i, j).head }.distinct
       col(levels.head).isin(labs: _*)
     } else {
@@ -708,38 +701,36 @@ object GeoExtent {
   private val EarthRadiusM = 6371008.8
 
   /** The boxes within `distance` meters, or the `sizeDeg`-wide box,
-    * around a point. One Extent cannot wrap: a `sizeDeg` box crossing ±180°
-    * comes back as two extents, one on each side (one full-longitude box
-    * from 360° up), and a `distance` box crossing ±180° widens to the full
-    * longitude span. */
+    * around a point. One Extent cannot wrap: a box crossing ±180° comes
+    * back as two extents, one on each side; a box 360° wide (a `sizeDeg`
+    * from 360°, or a radius cap reaching a pole) is one full-longitude
+    * box. */
   def boxesAroundPoint(lon: Double, lat: Double,
                        distance: Double = Double.NaN,
                        sizeDeg: Double = Double.NaN): Seq[Extent] = {
-    if (!distance.isNaN) {
-      // exact bounding box of the spherical cap of angular radius δ: a cap
-      // reaching a pole spans every longitude, otherwise its half-width is
-      // asin(sin δ / cos lat)
-      val delta = distance / EarthRadiusM
-      val dLat = math.toDegrees(delta) * 1.02
-      val dLon =
-        if (math.abs(lat) + dLat >= 90) 360.0
-        else math.toDegrees(math.asin(
-          math.sin(delta) / math.cos(math.toRadians(lat)))) * 1.02
-      val (xmin, xmax) =
-        if (lon - dLon < -180 || lon + dLon > 180) (-180.0, 180.0)
-        else (lon - dLon, lon + dLon)
-      Seq(Extent(xmin, xmax, math.max(lat - dLat, -90), math.min(lat + dLat, 90)))
-    } else {
-      require(!sizeDeg.isNaN, "provide distance (m) or sizeDeg (degrees)")
-      val h = sizeDeg / 2
-      val (ymin, ymax) = (math.max(lat - h, -90.0), math.min(lat + h, 90.0))
-      if (sizeDeg >= 360) Seq(Extent(-180, 180, ymin, ymax))
-      else if (lon - h < -180)
-        Seq(Extent(-180, lon + h, ymin, ymax), Extent(lon - h + 360, 180, ymin, ymax))
-      else if (lon + h > 180)
-        Seq(Extent(lon - h, 180, ymin, ymax), Extent(-180, lon + h - 360, ymin, ymax))
-      else Seq(Extent(lon - h, lon + h, ymin, ymax))
-    }
+    val (dLon, dLat) =
+      if (!distance.isNaN) {
+        // exact bounding box of the spherical cap of angular radius δ: a
+        // cap reaching a pole spans every longitude, otherwise its
+        // half-width is asin(sin δ / cos lat)
+        val delta = distance / EarthRadiusM
+        val dLat = math.toDegrees(delta) * 1.02
+        val dLon =
+          if (math.abs(lat) + dLat >= 90) 180.0
+          else math.toDegrees(math.asin(
+            math.sin(delta) / math.cos(math.toRadians(lat)))) * 1.02
+        (dLon, dLat)
+      } else {
+        require(!sizeDeg.isNaN, "provide distance (m) or sizeDeg (degrees)")
+        (sizeDeg / 2, sizeDeg / 2)
+      }
+    val (ymin, ymax) = (math.max(lat - dLat, -90.0), math.min(lat + dLat, 90.0))
+    if (dLon >= 180) Seq(Extent(-180, 180, ymin, ymax))
+    else if (lon - dLon < -180)
+      Seq(Extent(-180, lon + dLon, ymin, ymax), Extent(lon - dLon + 360, 180, ymin, ymax))
+    else if (lon + dLon > 180)
+      Seq(Extent(lon - dLon, 180, ymin, ymax), Extent(-180, lon + dLon - 360, ymin, ymax))
+    else Seq(Extent(lon - dLon, lon + dLon, ymin, ymax))
   }
 
   /** One extent covering [[boxesAroundPoint]]: a box split at ±180°

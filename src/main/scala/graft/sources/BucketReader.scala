@@ -1,23 +1,30 @@
 package graft.sources
 
 import java.nio.file.{FileSystems, Paths}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.partitioning.{Extent, GeoExtent, LonLatPartitioning, Partitioning2D}
+import graft.partitioning.{Extent, GeoExtent}
 import graft.geo.NamedExtents
 import graft.operators.SpatialFilters
 
 /** The read query path (reference read_bucket / satbucket.read,
   * satbucket/readers.py:162-303).
   *
-  * One Catalyst plan does everything the reference stages by hand:
-  * manifest → label-predicate partition pruning (directory-level, via
-  * `PartitioningAwareFileIndex`) → vectorized parquet scan with projection
-  * + predicate pushdown → spatial refinement → optional limit.
+  * One pruned path for both flavors and every query kind, as the
+  * reference's `get_filepaths_by_partition` (satbucket/io.py:110-126):
+  * the query resolves on the driver to its kept (i, j) cells; their
+  * existing directories (or, under filename filters, the matching files
+  * below them) are the only paths Spark lists; `Everything` reads the
+  * bucket root. One parquet scan follows, with projection + predicate
+  * pushdown, then spatial refinement and an optional limit.
   *
-  * Directory-flavor buckets (bare `label/` dirs) have no hive metadata, so
-  * pruning happens driver-side (explicit pruned paths) and the label
-  * columns are reconstructed from the file path segments.
+  * The flavor decides only where the label columns come from: hive
+  * partition columns under `basePath`, or, for directory-flavor buckets
+  * (bare `label/` dirs, no hive metadata), the file path segments.
+  * `prunePredicateForCells` is the one label guard for both; a query
+  * whose cells hold no file reads the root and the guard selects nothing,
+  * so an empty read keeps the bucket's columns.
   */
 object BucketReader {
 
@@ -50,7 +57,6 @@ object BucketReader {
            x: String = "lon", y: String = "lat",
            timeColumns: Seq[String] = Seq("time")): DataFrame = {
     val p = BucketInfo.readPartitioning(bucketDir)
-    val isHive = !p.flavor.contains("directory")
 
     // Partition-label strings must come back as strings (no hive partition
     // value type inference), and reference buckets written by pandas/pyarrow
@@ -59,8 +65,8 @@ object BucketReader {
     // the caller's session conf is untouched by this read.
     val rs = graft.core.ReaderSession(spark)
 
-    // the query's boxes: pruning keeps the union of their cells. A
-    // sizeDeg box crossing ±180° is two boxes, one on each side.
+    // the query's boxes: a sizeDeg or radius box crossing ±180° is two
+    // boxes, one on each side
     val extents: Seq[Extent] = query match {
       case Everything | ByPolygon(_, _) => Nil
       case ByExtent(e, pad) => Seq(pad2(e, pad))
@@ -68,60 +74,45 @@ object BucketReader {
       case ByContinent(n, pad) => Seq(NamedExtents.continent(n, pad))
       case AroundPoint(lon, lat, d, s) => GeoExtent.boxesAroundPoint(lon, lat, d, s)
     }
-    lazy val prune = extents.map(p.prunePredicate).reduceOption(_ || _)
-    // polygons prune per-cell (rect/polygon intersection), not by bbox —
-    // a concave query skips the bbox cells it never touches
-    val polyCells: Option[Seq[(Int, Int)]] = query match {
-      case ByPolygon(vs, pad) =>
-        require(vs.length >= 3, "ByPolygon needs >= 3 vertices")
-        Some(p.partitionIndicesByPolygon(vs, pad))
-      case _ => None
+    // the kept cells: the union of the boxes' cells, or per-cell polygon
+    // pruning (rect/polygon intersection — a concave query skips the bbox
+    // cells it never touches); Everything keeps the bucket root
+    val cells: Option[Seq[(Int, Int)]] = query match {
+      case Everything => None
+      case ByPolygon(vs, pad) => Some(p.partitionIndicesByPolygon(vs, pad))
+      case _ => Some(extents.flatMap(p.cellsByExtent).distinct)
     }
+    val dirs = cells.fold(Seq(bucketDir))(cs =>
+      BucketFs.filterExisting(p.directoriesForCells(cs).map(rel => s"$bucketDir/$rel")))
+    // P11 filename filters list the files under those directories; without
+    // them Spark lists the directories itself
+    val dataExt = Option(fileExtension).getOrElse(".parquet")
+    val listed =
+      if (fileExtension == null && globPattern == null && regexPattern == null) dirs
+      else dirs.flatMap(listFiles(_, dataExt, globPattern, regexPattern))
+    require(listed.nonEmpty || cells.isDefined,
+      s"no files match the filename filters in $bucketDir")
+    // no kept cell holds a file: read the root and let the cell guard
+    // below select nothing, so the result keeps the bucket's columns
+    val paths = if (listed.isEmpty) Seq(bucketDir) else listed
 
-    val hasNameFilter = fileExtension != null || globPattern != null || regexPattern != null
-
-    var df =
-      if (isHive && !hasNameFilter) {
-        // hive flavor: Catalyst prunes dirs from the label predicate.
-        // pathGlobFilter keeps non-parquet bucket files (e.g. the
-        // reference's bucket_info.yaml) out of the scan.
-        var d = rs.read.option("pathGlobFilter", "*.parquet").parquet(bucketDir)
-        prune.foreach(c => d = d.where(c))
-        polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
-        d
-      } else if (isHive) {
-        // explicit file list (P11 filename filters) + basePath keeps the
-        // hive partition columns resolvable
-        val files = listFiles(bucketDir, fileExtension, globPattern, regexPattern)
-        require(files.nonEmpty, s"no files match the filename filters in $bucketDir")
-        var d = rs.read.option("basePath", bucketDir).parquet(files: _*)
-        prune.foreach(c => d = d.where(c))
-        polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
-        d
-      } else {
-        // directory flavor: prune driver-side, rebuild labels from the path
-        val roots = (extents, polyCells) match {
-          case (es, _) if es.nonEmpty =>
-            // parallel exists() — pruned candidates number in the hundreds
-            // and sequential RPCs dominate on remote stores
-            BucketFs.filterExisting(
-              es.flatMap(p.directoriesByExtent).distinct.map(rel => s"$bucketDir/$rel"))
-          case (_, Some(cells)) =>
-            BucketFs.filterExisting(
-              p.directoriesForCells(cells).map(rel => s"$bucketDir/$rel"))
-          case _ => Seq(bucketDir)
-        }
-        require(roots.nonEmpty, "no partitions intersect the query extent")
-        val dataExt = if (fileExtension == null) ".parquet" else fileExtension
-        val all = roots.flatMap(r => listFiles(r, dataExt, globPattern, regexPattern))
-        require(all.nonEmpty, s"no files to read in $bucketDir")
-        val d = rs.read.parquet(all: _*)
-        val parts = split(input_file_name(), "/")
-        val n = p.order.length
-        p.order.zipWithIndex.foldLeft(d) { case (acc, (level, i)) =>
-          acc.withColumn(level, element_at(parts, -(n - i + 1)))
-        }
+    // the flavor decides only where the labels come from: hive partition
+    // columns under basePath, or the bare directory-flavor path segments
+    val isHive = !p.flavor.contains("directory")
+    val labelSource =
+      if (isHive) Map("basePath" -> bucketDir) else Map("recursiveFileLookup" -> "true")
+    // pathGlobFilter keeps non-data bucket files (e.g. the reference's
+    // bucket_info.yaml) out of a directory scan
+    var df = rs.read.option("pathGlobFilter", s"*$dataExt").options(labelSource)
+      .parquet(paths: _*)
+    if (!isHive) {
+      val parts = split(input_file_name(), "/")
+      val n = p.order.length
+      df = p.order.zipWithIndex.foldLeft(df) { case (acc, (level, i)) =>
+        acc.withColumn(level, element_at(parts, -(n - i + 1)))
       }
+    }
+    cells.foreach(cs => df = df.where(p.prunePredicateForCells(cs)))
 
     // nanos→timestamp conversion for declared time columns (see above)
     timeColumns.foreach { tc =>
@@ -162,17 +153,26 @@ object BucketReader {
     * on HDFS — instead of a sequential driver walk (the reference
     * thread-pools its os.walk, directories.py:124-170; Hadoop's recursive
     * listing is the Spark-native equivalent). Local paths come back as
-    * plain paths, remote ones as full URIs. */
+    * plain paths, remote ones as full URIs.
+    *
+    * Hidden entries are skipped as Spark's file index skips them: files
+    * named `_*` or `.*`, and every file below a directory named `.*`, or
+    * `_*` without a `=` (a crashed or in-flight `_staging*` tree). */
   def listFiles(root: String, fileExtension: String = null,
                 globPattern: String = null, regexPattern: String = null): Seq[String] = {
     val matcher = Option(globPattern).map(g =>
       FileSystems.getDefault.getPathMatcher(s"glob:$g"))
     val regex = Option(regexPattern).map(_.r)
     val (fs, rootPath) = BucketFs.resolve(root)
+    val rootDepth = fs.makeQualified(rootPath).depth
+    def hiddenDir(d: Path) =
+      d.getName.startsWith(".") || (d.getName.startsWith("_") && !d.getName.contains("="))
     BucketFs.listFileStatuses(fs, rootPath).iterator
       .filter(_.isFile)
       .map(_.getPath)
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .filter(f => !Iterator.iterate(f.getParent)(_.getParent)
+        .takeWhile(_.depth > rootDepth).exists(hiddenDir))
       .filter { f =>
         val name = f.getName
         Option(fileExtension).forall(ext => name.endsWith(ext)) &&

@@ -198,6 +198,18 @@ class PartitioningSpec extends AnyFunSuite {
     assert(GeoExtent.aroundPoint(5.0, 10.0, sizeDeg = 6.0) == Extent(2, 8, 7, 13))
   }
 
+  test("boxesAroundPoint: a radius box across ±180° splits in two, kept cells near ±180°") {
+    val p = LonLatPartitioning(size = (10, 10))
+    val boxes = GeoExtent.boxesAroundPoint(179.0, 10.0, distance = 500e3)
+    assert(boxes.size == 2, boxes)
+    assert(boxes.exists(_.xmax == 180.0) && boxes.exists(_.xmin == -180.0))
+    val lons = boxes.flatMap(p.cellsByExtent).map { case (i, _) => p.xCentroids(i) }.toSet
+    assert(lons == Set(175.0, -175.0), lons)
+    // a polar cap still spans every longitude
+    assert(GeoExtent.boxesAroundPoint(0.0, 85.0, distance = 1000e3)
+      .map(b => (b.xmin, b.xmax)) == Seq((-180.0, 180.0)))
+  }
+
   test("manifest to_dict round trip") {
     val p = LonLatPartitioning(size = (4, 4), labelsDecimals = Some((0, 0)))
     val d = p.toDict

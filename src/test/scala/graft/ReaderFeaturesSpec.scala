@@ -3,8 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import graft.geo.NamedExtents
 import graft.partitioning.{Extent, LonLatPartitioning, XYPartitioning}
 import graft.sources.{BucketReader, BucketWriter}
+import graft.sources.BucketReader._
 
 class ReaderFeaturesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -106,5 +111,142 @@ class ReaderFeaturesSpec extends AnyFunSuite {
     val grid = p.datasetGrid(spark)
     assert(grid.count() == p.nPartitions)
     assert(grid.columns.toSet == Set("x_c", "y_c", "data"))
+  }
+
+  // ---- the one pruned read path ----
+
+  private val flavors = Seq("hive", "directory")
+
+  // three granules of seeded points, lat within ±60° only, so reads near
+  // the poles and the cells the points miss hit no directory
+  private val granuleNames = Seq("GRAN.A.1.HDF5", "GRAN.B.2.HDF5", "GRAN.A.3.HDF5")
+  private def granulePoints(name: String): Seq[(Int, String, Double, Double)] = {
+    val g = granuleNames.indexOf(name)
+    val rng = new scala.util.Random(17 + g)
+    (0 until 150).map(k =>
+      (g * 1000 + k, name, rng.nextDouble() * 360 - 180, rng.nextDouble() * 120 - 60))
+  }
+  private lazy val points = granuleNames.flatMap(granulePoints)
+
+  private lazy val granuleBuckets: Map[String, String] = flavors.map { fl =>
+    val dir = tmp(s"single_$fl")
+    val reader = new BucketWriter.GranuleReader {
+      def read(s: org.apache.spark.sql.SparkSession, path: String) =
+        Some(granulePoints(path).toDF("id", "granule", "lon", "lat"))
+    }
+    val errs = BucketWriter.writeGranulesBucket(spark, granuleNames, dir,
+      LonLatPartitioning(size = (20, 20), flavor = Some(fl)), reader, parallelism = 1)
+    assert(errs.isEmpty, errs)
+    fl -> dir
+  }.toMap
+
+  private def ids(df: DataFrame): Seq[Int] =
+    df.select("id").as[Int].collect().toSeq.sorted
+
+  private def inBox(e: Extent)(x: Double, y: Double) =
+    x >= e.xmin && x <= e.xmax && y >= e.ymin && y <= e.ymax
+
+  private val concave = Seq((-50.0, -35.0), (10.0, 5.0), (70.0, -35.0),
+    (70.0, 45.0), (-50.0, 45.0))
+
+  // (name, query, driver-side membership of a point)
+  private val readCases: Seq[(String, SpatialQuery, (Double, Double) => Boolean)] = Seq(
+    ("everything", Everything, (_, _) => true),
+    ("box", ByExtent(Extent(-35, 48, -22, 37)), inBox(Extent(-35, 48, -22, 37))),
+    ("box over empty cells", ByExtent(Extent(-40, 40, 72, 88)), (_, _) => false),
+    ("country", ByCountry("Brazil"), inBox(NamedExtents.country("Brazil"))),
+    ("continent", ByContinent("Africa"), inBox(NamedExtents.continent("Africa"))),
+    ("polygon", ByPolygon(concave), (x, y) =>
+      graft.functions.Polygon.contains(concave.map(_._1).toArray, concave.map(_._2).toArray, x, y)),
+    ("polygon over empty cells", ByPolygon(Seq((0.0, 72.0), (30.0, 72.0), (15.0, 85.0))),
+      (_, _) => false),
+    ("distance", AroundPoint(12.5, 41.9, distance = 1500e3), (x, y) =>
+      graft.functions.Geodesic.inverse(x, y, 12.5, 41.9) <= 1500e3),
+    ("distance across ±180°", AroundPoint(179.0, 10.0, distance = 1500e3), (x, y) =>
+      graft.functions.Geodesic.inverse(x, y, 179.0, 10.0) <= 1500e3),
+    ("sizeDeg", AroundPoint(-60.0, 20.0, sizeDeg = 30.0), inBox(Extent(-75, -45, 5, 35))),
+    ("sizeDeg across ±180°", AroundPoint(-175.0, -10.0, sizeDeg = 30.0), (x, y) =>
+      (x <= -160 || x >= 170) && y >= -25 && y <= 5),
+    ("sizeDeg over empty cells", AroundPoint(100.0, 80.0, sizeDeg = 10.0), (_, _) => false))
+
+  // (name, extension, glob, regex, granules kept)
+  private val nameFilters: Seq[(String, String, String, String, Set[String])] = Seq(
+    ("no filter", null, null, null, granuleNames.toSet),
+    ("extension", ".parquet", null, null, granuleNames.toSet),
+    ("glob", null, "*.B.*", null, Set("GRAN.B.2.HDF5")),
+    ("regex", null, null, "GRAN\\.A\\.", Set("GRAN.A.1.HDF5", "GRAN.A.3.HDF5")))
+
+  test("every query kind x flavor x filename filter equals a brute-force filter") {
+    for {
+      fl <- flavors
+      (qn, q, member) <- readCases
+      (fn, ext, glob, regex, kept) <- nameFilters
+    } {
+      val expected = points.collect {
+        case (id, g, x, y) if kept(g) && member(x, y) => id
+      }.sorted
+      val got = ids(BucketReader.read(spark, granuleBuckets(fl), q,
+        fileExtension = ext, globPattern = glob, regexPattern = regex))
+      assert(got == expected, s"$fl / $qn / $fn: missing ${expected.diff(got)}, " +
+        s"extra ${got.diff(expected)}")
+    }
+    // the seeded data must leave the non-empty cases something to return
+    assert(readCases.filterNot(_._1.contains("empty")).forall { case (_, _, m) =>
+      points.exists { case (_, _, x, y) => m(x, y) } })
+  }
+
+  private def rootPaths(df: DataFrame): Set[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation =>
+      r.location.rootPaths.map(_.toUri.getPath.stripSuffix("/"))
+    }.flatten.toSet
+
+  test("plan: a hive box read lists exactly the existing kept cells, Everything the root") {
+    val dir = granuleBuckets("hive")
+    val p = LonLatPartitioning(size = (20, 20))
+    // the lat 70..90 row of cells holds no point
+    val ext = Extent(-35, 48, 30, 80)
+    val kept = p.directoriesByExtent(ext).map(rel => s"$dir/$rel")
+      .filter(d => new java.io.File(d).isDirectory).toSet
+    assert(kept.nonEmpty && kept.size < p.directoriesByExtent(ext).size)
+    assert(rootPaths(BucketReader.read(spark, dir, ByExtent(ext))) == kept)
+    assert(rootPaths(BucketReader.read(spark, dir)) == Set(dir))
+  }
+
+  test("a read with no kept cell is empty with the bucket's columns, both flavors") {
+    for (fl <- flavors) {
+      val dir = granuleBuckets(fl)
+      val cols = BucketReader.read(spark, dir).columns.toSeq
+      for (q <- Seq(ByExtent(Extent(-40, 40, 72, 88)), AroundPoint(100.0, 80.0, sizeDeg = 10.0),
+                    ByPolygon(Seq((0.0, 72.0), (30.0, 72.0), (15.0, 85.0))))) {
+        for (glob <- Seq(null, "*.B.*")) {
+          val df = BucketReader.read(spark, dir, q, globPattern = glob)
+          assert(df.columns.toSeq == cols && df.count() == 0, s"$fl / $q / $glob")
+        }
+      }
+    }
+  }
+
+  test("staging debris under _staging* stays out of listed reads, both flavors") {
+    for (fl <- flavors) {
+      val dir = tmp(s"debris_$fl")
+      val pts = Seq((1, 178.0, 10.0), (2, -179.0, 10.0), (3, 5.0, -40.0))
+      BucketWriter.writeBucket(pts.toDF("id", "lon", "lat"), dir,
+        LonLatPartitioning(size = (10, 10), flavor = Some(fl)), mode = "overwrite")
+      // a crashed writer's staging tree: one cell copied under _staging_x/
+      val cell = BucketReader.filepathsByPartition(dir).keys.min
+      val src = java.nio.file.Paths.get(dir, cell)
+      val dst = java.nio.file.Paths.get(dir, "_staging_x", cell)
+      Files.createDirectories(dst)
+      Files.list(src).forEach(f => Files.copy(f, dst.resolve(f.getFileName)))
+      assert(new java.io.File(dst.toString).list().exists(_.endsWith(".parquet")))
+
+      for (ext <- Seq(null, ".parquet"))
+        assert(ids(BucketReader.read(spark, dir, fileExtension = ext)) == Seq(1, 2, 3),
+          s"$fl / $ext")
+      assert(BucketReader.listFiles(dir).forall(!_.contains("_staging")))
+      assert(BucketReader.filepathsByPartition(dir).values.flatten.forall(!_.contains("_staging")))
+    }
   }
 }
