@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.geo.NamedExtents
@@ -236,8 +235,8 @@ class ReaderFeaturesSpec extends AnyFunSuite {
         LonLatPartitioning(size = (10, 10), flavor = Some(fl)), mode = "overwrite")
       // a crashed writer's staging tree: one cell copied under _staging_x/
       val cell = BucketReader.filepathsByPartition(dir).keys.min
-      val src = java.nio.file.Paths.get(dir, cell)
-      val dst = java.nio.file.Paths.get(dir, "_staging_x", cell)
+      val src = Paths.get(dir, cell)
+      val dst = Paths.get(dir, "_staging_x", cell)
       Files.createDirectories(dst)
       Files.list(src).forEach(f => Files.copy(f, dst.resolve(f.getFileName)))
       assert(new java.io.File(dst.toString).list().exists(_.endsWith(".parquet")))
