@@ -40,6 +40,13 @@ object ReaderSession {
       // (satbucket/checks.py:40-89) — not as TIMESTAMP_NTZ, which breaks
       // unix_micros and typed Timestamp consumers downstream.
       ns.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // A read handed more than 32 paths (a wide pruned bucket read) lists
+      // them in a Spark job of one task per path, up to 10,000 by default;
+      // at a few thousand kept cells those tiny tasks cost more than the
+      // listing. One task per core lists the same paths in a few batches.
+      val listing = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+      if (!spark.sessionState.conf.contains(listing))
+        ns.conf.set(listing, spark.sparkContext.defaultParallelism.toString)
       cache.put(spark, ns)
     }
     ns

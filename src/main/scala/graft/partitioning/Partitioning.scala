@@ -300,15 +300,15 @@ sealed trait Partitioning2D extends Serializable {
     } yield (i, j)
   }
 
-  /** Label predicate selecting EXACTLY the given cells — non-rectangular
-    * cell sets (polygon queries, boxes split at ±180°) stay
-    * non-rectangular, and no cells select nothing. Grouped by first-level
+  /** Label predicate selecting EXACTLY the given cells — unlike a per-axis
+    * `isin` cross product, non-rectangular cell sets (polygon queries,
+    * boxes split at ±180°) stay non-rectangular. Grouped by first-level
     * label so the predicate is O(distinct x-labels) OR terms, each with
     * one `isin`; on hive partition columns Catalyst evaluates it against
-    * partition values only, so directory pruning still applies. */
+    * partition values only. */
   def prunePredicateForCells(cells: Seq[(Int, Int)]): Column = {
-    if (cells.isEmpty) lit(false)
-    else if (nLevels == 1) {
+    require(cells.nonEmpty, "no partitions intersect the query polygon")
+    if (nLevels == 1) {
       val labs = cells.map { case (i, j) => labelsOfIndices(i, j).head }.distinct
       col(levels.head).isin(labs: _*)
     } else {

@@ -207,26 +207,31 @@ object BucketFs {
     c.stripPrefix(r).stripPrefix("/")
   }
 
-  /** Parallel existence filter — candidate partition dirs from extent
-    * pruning can number in the hundreds; one-at-a-time exists() RPCs
-    * dominate on remote stores. */
-  def filterExisting(paths: Seq[String]): Seq[String] = {
-    if (paths.isEmpty) return paths
-    // one FS handle per (scheme, authority) — candidates normally all live
-    // under one bucket, but two buckets on the same scheme with different
-    // authorities (e.g. two s3a:// buckets) need distinct FileSystems or
-    // exists() throws Wrong-FS; per-path resolve would rebuild conf lookups
-    // on a hot path
-    val c = conf
-    val byFs = paths.groupBy { p =>
-      val u = new Path(p).toUri
-      (Option(u.getScheme), Option(u.getAuthority))
-    }
-    byFs.toSeq.flatMap { case (_, group) =>
-      val fs = new Path(group.head).getFileSystem(c)
-      val par = group.par
-      par.tasksupport = fsTaskSupport
-      par.filter(p => fs.exists(new Path(p))).seq
-    }
+  /** The existing ones of `rels`, directories relative to `root`, found
+    * by listing each candidate parent once, level by level, instead of one
+    * exists() per path: a wide query's nx·ny candidate cells have only nx
+    * parents, and a parent that does not exist is never listed. So a
+    * pruned read makes at most as many listing calls as a listing of the
+    * whole bucket. Listings run in parallel — sequential RPCs dominate on
+    * remote stores. */
+  def existingDirs(root: String, rels: Seq[String]): Seq[String] = {
+    val (fs, rootPath) = resolve(root)
+    def parentOf(r: String) = r.lastIndexOf('/') match { case -1 => "" case k => r.take(k) }
+    def live(rs: Seq[String]): Set[String] =
+      if (rs.isEmpty) Set.empty
+      else {
+        val byParent = rs.distinct.groupBy(parentOf)
+        val parents = live(byParent.keys.filter(_.nonEmpty).toSeq) ++
+          byParent.keys.filter(_.isEmpty)
+        val par = parents.toSeq.par
+        par.tasksupport = fsTaskSupport
+        par.flatMap { d =>
+          val names = fs.listStatus(if (d.isEmpty) rootPath else new Path(rootPath, d))
+            .filter(_.isDirectory).map(_.getPath.getName).toSet
+          byParent(d).filter(r => names(r.substring(r.lastIndexOf('/') + 1)))
+        }.seq.toSet
+      }
+    val kept = live(rels)
+    rels.filter(kept)
   }
 }

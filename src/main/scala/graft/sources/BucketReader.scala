@@ -21,10 +21,10 @@ import graft.operators.SpatialFilters
   *
   * The flavor decides only where the label columns come from: hive
   * partition columns under `basePath`, or, for directory-flavor buckets
-  * (bare `label/` dirs, no hive metadata), the file path segments.
-  * `prunePredicateForCells` is the one label guard for both; a query
-  * whose cells hold no file reads the root and the guard selects nothing,
-  * so an empty read keeps the bucket's columns.
+  * (bare `label/` dirs, no hive metadata), the file path segments. Spark
+  * sees only the kept cells' files, so no label predicate guards the
+  * scan; a query whose cells hold no matching file reads the root and
+  * selects nothing, so an empty read keeps the bucket's columns.
   */
 object BucketReader {
 
@@ -83,28 +83,31 @@ object BucketReader {
       case _ => Some(extents.flatMap(p.cellsByExtent).distinct)
     }
     val dirs = cells.fold(Seq(bucketDir))(cs =>
-      BucketFs.filterExisting(p.directoriesForCells(cs).map(rel => s"$bucketDir/$rel")))
+      BucketFs.existingDirs(bucketDir, p.directoriesForCells(cs)).map(rel => s"$bucketDir/$rel"))
     // P11 filename filters list the files under those directories; without
     // them Spark lists the directories itself
-    val dataExt = Option(fileExtension).getOrElse(".parquet")
+    val hasNameFilter = fileExtension != null || globPattern != null || regexPattern != null
     val listed =
-      if (fileExtension == null && globPattern == null && regexPattern == null) dirs
-      else dirs.flatMap(listFiles(_, dataExt, globPattern, regexPattern))
+      if (hasNameFilter) dirs.flatMap(listFiles(_, fileExtension, globPattern, regexPattern))
+      else dirs
     require(listed.nonEmpty || cells.isDefined,
       s"no files match the filename filters in $bucketDir")
-    // no kept cell holds a file: read the root and let the cell guard
-    // below select nothing, so the result keeps the bucket's columns
-    val paths = if (listed.isEmpty) Seq(bucketDir) else listed
+    // no kept cell holds a matching file: read the root and select nothing,
+    // so the result keeps the bucket's columns
+    val empty = listed.isEmpty
+    // where Spark lists directories, pathGlobFilter keeps non-data bucket
+    // files (e.g. the reference's bucket_info.yaml) out of the scan
+    val dirScan =
+      if (hasNameFilter && !empty) Map.empty[String, String]
+      else Map("pathGlobFilter" -> s"*${Option(fileExtension).getOrElse(".parquet")}")
 
     // the flavor decides only where the labels come from: hive partition
     // columns under basePath, or the bare directory-flavor path segments
     val isHive = !p.flavor.contains("directory")
     val labelSource =
       if (isHive) Map("basePath" -> bucketDir) else Map("recursiveFileLookup" -> "true")
-    // pathGlobFilter keeps non-data bucket files (e.g. the reference's
-    // bucket_info.yaml) out of a directory scan
-    var df = rs.read.option("pathGlobFilter", s"*$dataExt").options(labelSource)
-      .parquet(paths: _*)
+    var df = rs.read.options(dirScan).options(labelSource)
+      .parquet((if (empty) Seq(bucketDir) else listed): _*)
     if (!isHive) {
       val parts = split(input_file_name(), "/")
       val n = p.order.length
@@ -112,7 +115,7 @@ object BucketReader {
         acc.withColumn(level, element_at(parts, -(n - i + 1)))
       }
     }
-    cells.foreach(cs => df = df.where(p.prunePredicateForCells(cs)))
+    if (empty) df = df.where(lit(false))
 
     // nanos→timestamp conversion for declared time columns (see above)
     timeColumns.foreach { tc =>

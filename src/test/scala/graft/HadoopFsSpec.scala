@@ -82,4 +82,15 @@ class HadoopFsSpec extends AnyFunSuite {
     val back = BucketReader.read(spark, dst)
     assert(back.count() == 150)
   }
+
+  test("existingDirs keeps exactly the existing candidate directories, in order") {
+    val dir = mockDir("hfs_existing")
+    val local = dir.stripPrefix("mock:")
+    for (d <- Seq("a=1/b=1", "a=1/b=2", "a=2/b=1")) Files.createDirectories(java.nio.file.Paths.get(local, d))
+    Files.createFile(java.nio.file.Paths.get(local, "a=2", "b=2"))  // a file, not a cell
+    val rels = Seq("a=2/b=1", "a=3/b=1", "a=1/b=3", "a=2/b=2", "a=1/b=1", "a=1/b=2")
+    assert(BucketFs.existingDirs(dir, rels) == Seq("a=2/b=1", "a=1/b=1", "a=1/b=2"))
+    assert(BucketFs.existingDirs(dir, Seq("a=1", "c=1")) == Seq("a=1"))
+    assert(BucketFs.existingDirs(dir, Nil).isEmpty)
+  }
 }

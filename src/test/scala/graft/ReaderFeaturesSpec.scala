@@ -227,6 +227,46 @@ class ReaderFeaturesSpec extends AnyFunSuite {
     }
   }
 
+  test("kept cells holding no file the filename filter accepts read empty, both flavors") {
+    // a 20° cell holding A points well inside it but no B point: a box
+    // inside that cell keeps only it, and the cell's directory exists
+    def cellOf(x: Double, y: Double) =
+      (math.floor((x + 180) / 20).toInt, math.floor((y + 90) / 20).toInt)
+    def shrunk(c: (Int, Int)) =
+      Extent(-180 + 20 * c._1 + 1, -180 + 20 * c._1 + 19, -90 + 20 * c._2 + 1, -90 + 20 * c._2 + 19)
+    val bCells = points.collect { case (_, g, x, y) if g.contains(".B.") => cellOf(x, y) }.toSet
+    val (cell, aIds) = points
+      .collect { case (id, g, x, y) if !bCells(cellOf(x, y)) && inBox(shrunk(cellOf(x, y)))(x, y) =>
+        (cellOf(x, y), id) }
+      .groupBy(_._1).toSeq.sortBy(_._1).head match { case (c, ps) => (c, ps.map(_._2).sorted) }
+    val q = ByExtent(shrunk(cell))
+    for (fl <- flavors) {
+      val dir = granuleBuckets(fl)
+      val cols = BucketReader.read(spark, dir).columns.toSeq
+      assert(ids(BucketReader.read(spark, dir, q)) == aIds, s"$fl / $cell")
+      for ((glob, regex) <- Seq(("*.B.*", null), (null, "GRAN\\.B\\."))) {
+        val df = BucketReader.read(spark, dir, q, globPattern = glob, regexPattern = regex)
+        assert(df.columns.toSeq == cols && df.count() == 0, s"$fl / $glob / $regex")
+      }
+    }
+  }
+
+  test("a glob or regex filter alone takes the files it matches, whatever the extension") {
+    for (fl <- flavors) {
+      val dir = tmp(s"pq_$fl")
+      val pts = Seq((1, 178.0, 10.0), (2, -179.0, 10.0), (3, 5.0, -40.0))
+      BucketWriter.writeBucket(pts.toDF("id", "lon", "lat"), dir,
+        LonLatPartitioning(size = (10, 10), flavor = Some(fl)), mode = "overwrite")
+      BucketReader.listFiles(dir, ".parquet").foreach { f =>
+        Files.move(Paths.get(f), Paths.get(f.stripSuffix(".parquet") + ".pq"))
+      }
+      for ((ext, glob, regex) <- Seq((null, "*.pq", null), (null, null, "part-"), (".pq", null, null)))
+        assert(ids(BucketReader.read(spark, dir, ByExtent(Extent(-180, 180, -90, 90)),
+          fileExtension = ext, globPattern = glob, regexPattern = regex)) == Seq(1, 2, 3),
+          s"$fl / $ext / $glob / $regex")
+    }
+  }
+
   test("staging debris under _staging* stays out of listed reads, both flavors") {
     for (fl <- flavors) {
       val dir = tmp(s"debris_$fl")
