@@ -148,11 +148,24 @@ class ReaderFeaturesSpec extends AnyFunSuite {
   private val concave = Seq((-50.0, -35.0), (10.0, 5.0), (70.0, -35.0),
     (70.0, 45.0), (-50.0, 45.0))
 
+  // a box inside one 20° cell that holds A points but no B point: the
+  // cell's directory exists, yet no file in it matches the B filters
+  private lazy val aOnlyBox: Extent = {
+    def cellOf(x: Double, y: Double) =
+      (math.floor((x + 180) / 20).toInt, math.floor((y + 90) / 20).toInt)
+    def inner(c: (Int, Int)) =
+      Extent(-180 + 20 * c._1 + 1, -180 + 20 * c._1 + 19, -90 + 20 * c._2 + 1, -90 + 20 * c._2 + 19)
+    val bCells = points.collect { case (_, g, x, y) if g.contains(".B.") => cellOf(x, y) }.toSet
+    points.collect { case (_, _, x, y) if !bCells(cellOf(x, y)) && inBox(inner(cellOf(x, y)))(x, y) =>
+      inner(cellOf(x, y)) }.minBy(e => (e.xmin, e.ymin))
+  }
+
   // (name, query, driver-side membership of a point)
   private val readCases: Seq[(String, SpatialQuery, (Double, Double) => Boolean)] = Seq(
     ("everything", Everything, (_, _) => true),
     ("box", ByExtent(Extent(-35, 48, -22, 37)), inBox(Extent(-35, 48, -22, 37))),
     ("box over empty cells", ByExtent(Extent(-40, 40, 72, 88)), (_, _) => false),
+    ("box in a cell with no B file", ByExtent(aOnlyBox), inBox(aOnlyBox)),
     ("country", ByCountry("Brazil"), inBox(NamedExtents.country("Brazil"))),
     ("continent", ByContinent("Africa"), inBox(NamedExtents.continent("Africa"))),
     ("polygon", ByPolygon(concave), (x, y) =>
@@ -223,30 +236,6 @@ class ReaderFeaturesSpec extends AnyFunSuite {
           val df = BucketReader.read(spark, dir, q, globPattern = glob)
           assert(df.columns.toSeq == cols && df.count() == 0, s"$fl / $q / $glob")
         }
-      }
-    }
-  }
-
-  test("kept cells holding no file the filename filter accepts read empty, both flavors") {
-    // a 20° cell holding A points well inside it but no B point: a box
-    // inside that cell keeps only it, and the cell's directory exists
-    def cellOf(x: Double, y: Double) =
-      (math.floor((x + 180) / 20).toInt, math.floor((y + 90) / 20).toInt)
-    def shrunk(c: (Int, Int)) =
-      Extent(-180 + 20 * c._1 + 1, -180 + 20 * c._1 + 19, -90 + 20 * c._2 + 1, -90 + 20 * c._2 + 19)
-    val bCells = points.collect { case (_, g, x, y) if g.contains(".B.") => cellOf(x, y) }.toSet
-    val (cell, aIds) = points
-      .collect { case (id, g, x, y) if !bCells(cellOf(x, y)) && inBox(shrunk(cellOf(x, y)))(x, y) =>
-        (cellOf(x, y), id) }
-      .groupBy(_._1).toSeq.sortBy(_._1).head match { case (c, ps) => (c, ps.map(_._2).sorted) }
-    val q = ByExtent(shrunk(cell))
-    for (fl <- flavors) {
-      val dir = granuleBuckets(fl)
-      val cols = BucketReader.read(spark, dir).columns.toSeq
-      assert(ids(BucketReader.read(spark, dir, q)) == aIds, s"$fl / $cell")
-      for ((glob, regex) <- Seq(("*.B.*", null), (null, "GRAN\\.B\\."))) {
-        val df = BucketReader.read(spark, dir, q, globPattern = glob, regexPattern = regex)
-        assert(df.columns.toSeq == cols && df.count() == 0, s"$fl / $glob / $regex")
       }
     }
   }
