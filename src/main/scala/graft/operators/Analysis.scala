@@ -5,7 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Time-series / swath analysis operators (reference satbucket/analysis.py
-  * and satbucket/utils/time.py), re-expressed as window/join plans.
+  * and satbucket/utils/time.py), re-expressed as window/join plans. The
+  * swath grid takes its per-granule bounds from one aggregate collected
+  * to the driver (a single overpass holds a handful of granules).
   *
   * Scale note: the reference's operators sort *all* timesteps on one
   * machine. Every window here takes optional partition keys (e.g. spatial
@@ -72,53 +74,56 @@ object Analysis {
         Window.partitionBy((partitionBy :+ "overpass_id").map(col): _*)))
   }
 
-  /** W5: contiguous along-track re-indexing across granules
-    * (get_swath_indices, analysis.py:113-182). `gpm_id` = "granule-along";
-    * each granule's along-track block is shifted so blocks are contiguous:
-    * offset(g) = Σ widths of granules before g (granule-id order);
-    * x_index = along - min_along(g) + offset(g). Window-only, no collect.
-    */
-  def swathIndices(df: DataFrame, xIndex: String = "gpm_id",
-                   yIndex: String = "gpm_cross_track_id"): DataFrame = {
-    val parsed = df
-      .withColumn("__granule", split(col(xIndex), "-").getItem(0).cast("long"))
-      .withColumn("__along", split(col(xIndex), "-").getItem(1).cast("long"))
-    val perGranule = Window.partitionBy(col("__granule"))
-    val withBounds = parsed
-      .withColumn("__min_along", min("__along").over(perGranule))
-      .withColumn("__max_along", max("__along").over(perGranule))
-      .withColumn("__width", col("__max_along") - col("__min_along") + 1)
-    // running offset over granules in granule-id order; granule count is
-    // small (bounded by orbit segments in the overpass) so a rangeBetween
-    // window over distinct granules stays cheap
-    val granules = withBounds.select("__granule", "__width").distinct()
-    val offsetW = Window.orderBy("__granule")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = granules.withColumn("__offset",
-      coalesce(sum("__width").over(offsetW), lit(0L)))
-    withBounds
-      .join(broadcast(offsets.select("__granule", "__offset")), Seq("__granule"))
-      .withColumn("x_index", col("__along") - col("__min_along") + col("__offset"))
-      .withColumn("y_index", col(yIndex).cast("long"))
-      .drop("__granule", "__along", "__min_along", "__max_along", "__width", "__offset")
+  /** A swath re-indexed by [[swathIndices]] and the extent of its dense
+    * grid: `nx` along-track by `ny` cross-track cells, the latter from `y0`. */
+  private final case class Swath(indexed: DataFrame, nx: Long, y0: Long, ny: Long)
+
+  /** One per-granule aggregate (min/max along, min/max cross) collected to
+    * the driver; the granule count is small (orbit segments in one
+    * overpass). The driver walks the bounds in granule-id order: a
+    * granule's shift is the summed widths of the granules before it minus
+    * its min along; a granule with no along value adds no width. */
+  private def indexSwath(df: DataFrame, xIndex: String, yIndex: String): Swath = {
+    val parts = split(col(xIndex), "-")
+    val granule = parts.getItem(0).cast("long")
+    val along = parts.getItem(1).cast("long")
+    val cross = col(yIndex).cast("long")
+    val rows = df.where(granule.isNotNull)
+    val bounds = rows.groupBy(granule).agg(min(along), max(along), min(cross), max(cross))
+      .collect().sortBy(_.getLong(0))
+    val spans = bounds.filterNot(_.isNullAt(1))
+    val offsets = spans.scanLeft(0L)((o, b) => o + b.getLong(2) - b.getLong(1) + 1)
+    val shift = spans.zip(offsets).map { case (b, o) => b.getLong(0) -> (o - b.getLong(1)) }.toMap
+    val ys = bounds.filterNot(_.isNullAt(3))
+    val (y0, y1) =
+      if (ys.isEmpty) (0L, -1L) else (ys.map(_.getLong(3)).min, ys.map(_.getLong(4)).max)
+    Swath(rows.withColumn("x_index", along + element_at(typedLit(shift), granule))
+      .withColumn("y_index", cross), offsets.last, y0, y1 - y0 + 1)
   }
 
-  /** W6/J1/J3/O4: dense 2-D swath grid — re-index, dedup, and left-join the
-    * full (x_index × y_index) product so missing footprints appear as null
-    * rows (overpass_to_dataset, analysis.py:185-255). The full grid is
-    * generated with `spark.range` and broadcast (a single overpass is
-    * 10^4-10^5 cells). */
+  /** W5: contiguous along-track re-indexing across granules
+    * (get_swath_indices, analysis.py:113-182). `gpm_id` = "granule-along";
+    * each granule's along-track block is shifted so blocks are contiguous
+    * in granule-id order: x_index = along - min_along(g) + Σ widths of the
+    * granules before g. The bounds come from one driver-side aggregate;
+    * rows with no granule are dropped. */
+  def swathIndices(df: DataFrame, xIndex: String = "gpm_id",
+                   yIndex: String = "gpm_cross_track_id"): DataFrame =
+    indexSwath(df, xIndex, yIndex).indexed
+
+  /** W6/J1/J3/O4: dense 2-D swath grid — re-index, dedup, and left-join onto
+    * the full (x_index × y_index) mesh, one `spark.range` sized from the
+    * re-index's collected bounds, so missing footprints appear as null rows
+    * (overpass_to_dataset, analysis.py:185-255). An empty overpass gives an
+    * empty grid. */
   def overpassToGrid(spark: SparkSession, dfOverpass: DataFrame,
                      xIndex: String = "gpm_id",
                      yIndex: String = "gpm_cross_track_id"): DataFrame = {
-    val indexed = swathIndices(dfOverpass, xIndex, yIndex)
-      .dropDuplicates("x_index", "y_index")
-    val xr = indexed.agg(min("x_index"), max("x_index"),
-      min("y_index"), max("y_index")).head()
-    val (x0, x1, y0, y1) = (xr.getLong(0), xr.getLong(1), xr.getLong(2), xr.getLong(3))
-    val fullGrid = spark.range(0, x1 + 1).select(col("id").as("x_index"))
-      .crossJoin(spark.range(y0, y1 + 1).select(col("id").as("y_index")))
-    broadcast(fullGrid).join(indexed, Seq("x_index", "y_index"), "left")
+    val sw = indexSwath(dfOverpass, xIndex, yIndex)
+    spark.range(sw.nx * sw.ny)
+      .select(expr(s"id div ${sw.ny}").as("x_index"),
+        expr(s"id % ${sw.ny} + ${sw.y0}").as("y_index"))
+      .join(sw.indexed.dropDuplicates("x_index", "y_index"), Seq("x_index", "y_index"), "left")
   }
 
   /** A5: first non-null value per group (xr_first analogue). */
@@ -126,8 +131,8 @@ object Analysis {
 
   /** W8: snap an (already aggregated) time series onto a uniform time grid,
     * filling holes (regularize_dataset, utils/time.py:279-332). Generates
-    * the full axis with sequence+explode, left-joins (broadcast: the axis
-    * is tiny relative to data), and coalesces fill values per column. */
+    * the full axis with sequence+explode, left-joins the data onto it, and
+    * coalesces fill values per column. */
   def regularizeTime(df: DataFrame, freqSeconds: Long,
                      time: String = "time",
                      fillValues: Map[String, Any] = Map.empty): DataFrame = {
@@ -137,7 +142,7 @@ object Analysis {
       explode(sequence(
         lit(t0), lit(t1),
         expr(s"INTERVAL $freqSeconds SECONDS"))).as(time))
-    val joined = broadcast(axis).join(df, Seq(time), "left")
+    val joined = axis.join(df, Seq(time), "left")
     fillValues.foldLeft(joined) { case (d, (c, v)) =>
       d.withColumn(c, coalesce(col(c), lit(v)))
     }
@@ -207,7 +212,7 @@ object Analysis {
     import spark.implicits._
     val xs = p.xCentroids.toSeq.toDF(xc)
     val ys = p.yCentroids.toSeq.toDF(yc)
-    broadcast(xs.crossJoin(ys)).join(agg, Seq(xc, yc), "left")
+    xs.crossJoin(ys).join(agg, Seq(xc, yc), "left")
       // CRS column metadata (reference attaches EPSG:4326 to every grid
       // product, analysis.py:253-254) — survives selects/joins by name
       .withColumn(xc, col(xc).as(xc, p.crsMetadata))
@@ -243,27 +248,33 @@ object Analysis {
     * so the arithmetic is integer-exact and oracle-replayable. */
   def funnelSteps(events: DataFrame, userCol: String, typeCol: String,
                   timeCol: String, steps: Seq[String],
-                  withinSeconds: Long): DataFrame = {
+                  withinSeconds: Long): DataFrame =
+    funnelChain(events, userCol, typeCol, timeCol, steps, withinSeconds)
+      .zip(steps).zipWithIndex.map { case ((f, name), i) =>
+        f.agg(count(lit(1)).as("n_users"))
+          .select(lit(i + 1).as("step"), lit(name).as("step_name"), col("n_users"))
+      }.reduce(_ unionByName _)
+
+  /** The step chain of [[funnelSteps]] and [[funnelCompletions]]: the k-th
+    * frame holds (u, t1, tk) for every user who completed steps 1..k, with
+    * t1 the step-1 time and tk the step-k time. */
+  private def funnelChain(events: DataFrame, userCol: String, typeCol: String,
+                          timeCol: String, steps: Seq[String],
+                          withinSeconds: Long): Seq[DataFrame] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(withinSeconds > 0, "withinSeconds must be positive")
     val ev = events.select(col(userCol).as("u"), col(typeCol).as("t"),
       unix_micros(col(timeCol)).as("us"))
     val withinUs = withinSeconds * 1000000L
-    var cur = ev.where(col("t") === steps.head)
+    val first = ev.where(col("t") === steps.head)
       .groupBy("u").agg(min("us").as("t1"))
       .withColumn("tk", col("t1"))
-    var frames = List((1, steps.head, cur))
-    steps.zipWithIndex.drop(1).foreach { case (step, i) =>
-      cur = ev.where(col("t") === step)
+    steps.drop(1).scanLeft(first) { (cur, step) =>
+      ev.where(col("t") === step)
         .join(cur.select("u", "t1", "tk"), "u")
         .where(col("us") > col("tk") && col("us") <= col("t1") + withinUs)
         .groupBy("u", "t1").agg(min("us").as("tk"))
-      frames ::= ((i + 1, step, cur))
     }
-    frames.reverse.map { case (i, name, f) =>
-      f.agg(count(lit(1)).as("n_users"))
-        .select(lit(i).as("step"), lit(name).as("step_name"), col("n_users"))
-    }.reduce(_ unionByName _)
   }
 
   /** Per-group k-sigma outlier flags in EXACT integer arithmetic — no
@@ -299,23 +310,9 @@ object Analysis {
     * bounded joins on the user key). */
   def funnelCompletions(events: DataFrame, userCol: String, typeCol: String,
                         timeCol: String, steps: Seq[String],
-                        withinSeconds: Long): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(withinSeconds > 0, "withinSeconds must be positive")
-    val ev = events.select(col(userCol).as("u"), col(typeCol).as("t"),
-      unix_micros(col(timeCol)).as("us"))
-    val withinUs = withinSeconds * 1000000L
-    var cur = ev.where(col("t") === steps.head)
-      .groupBy("u").agg(min("us").as("t1"))
-      .withColumn("tk", col("t1"))
-    steps.drop(1).foreach { step =>
-      cur = ev.where(col("t") === step)
-        .join(cur.select("u", "t1", "tk"), "u")
-        .where(col("us") > col("tk") && col("us") <= col("t1") + withinUs)
-        .groupBy("u", "t1").agg(min("us").as("tk"))
-    }
-    cur.select(col("u"), col("t1"), col("tk"))
-  }
+                        withinSeconds: Long): DataFrame =
+    funnelChain(events, userCol, typeCol, timeCol, steps, withinSeconds)
+      .last.select(col("u"), col("t1"), col("tk"))
 
   /** Cohort retention: users bucketed by the time bucket of their FIRST
     * event; for every (cohort bucket, buckets-since-cohort) cell, the
@@ -377,7 +374,6 @@ object Analysis {
   def eventPaths(events: DataFrame, userCol: String, typeCol: String,
                  timeCol: String, idCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val ev = events.select(col(userCol).as("u"), col(typeCol).as("t"),
       unix_micros(col(timeCol)).as("us"), col(idCol).as("id"))
     val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
@@ -405,7 +401,6 @@ object Analysis {
                        conversionType: String,
                        touchTypes: Seq[String]): DataFrame = {
     require(touchTypes.nonEmpty, "need at least one touch type")
-    import org.apache.spark.sql.expressions.Window
     val ev = events.select(col(userCol).as("u"), col(typeCol).as("t"),
       unix_micros(col(timeCol)).as("us"), col(idCol).as("id"))
     val w = Window.partitionBy(col("u"))

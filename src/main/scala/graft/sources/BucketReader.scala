@@ -90,11 +90,12 @@ object BucketReader {
     val listed =
       if (hasNameFilter) dirs.flatMap(listFiles(_, fileExtension, globPattern, regexPattern))
       else dirs
-    require(listed.nonEmpty || cells.isDefined,
-      s"no files match the filename filters in $bucketDir")
-    // no kept cell holds a matching file: read the root and select nothing,
-    // so the result keeps the bucket's columns
+    // no kept cell holds a matching file: read the root (it must hold a file
+    // of the filter's extension) and select nothing, keeping its columns
     val empty = listed.isEmpty
+    require(!empty || (cells.isDefined &&
+        (fileExtension == null || listFiles(bucketDir, fileExtension).nonEmpty)),
+      s"no files match the filename filters in $bucketDir")
     // where Spark lists directories, pathGlobFilter keeps non-data bucket
     // files (e.g. the reference's bucket_info.yaml) out of the scan
     val dirScan =

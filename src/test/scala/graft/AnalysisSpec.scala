@@ -68,6 +68,13 @@ class AnalysisSpec extends AnyFunSuite {
     assert(grid.where($"v".isNotNull).count() == 2)
   }
 
+  test("overpassToGrid: an empty overpass gives an empty grid with the input's columns") {
+    val df = Seq.empty[(String, Int, Double)].toDF("gpm_id", "gpm_cross_track_id", "v")
+    val grid = Analysis.overpassToGrid(spark, df)
+    assert(grid.columns.toSeq == Seq("x_index", "y_index", "gpm_id", "gpm_cross_track_id", "v"))
+    assert(grid.count() == 0)
+  }
+
   test("regularizeTime: uniform axis + typed fills (W8)") {
     val df = Seq(
       (ts("2021-01-01 00:00:00"), 1.0),

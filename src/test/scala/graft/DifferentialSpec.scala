@@ -658,4 +658,63 @@ class DifferentialSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("swathIndices + overpassToGrid ≡ driver granule walk over random " +
+       "swaths with gaps, holes and duplicate footprints") {
+    // own seed: the rounds above keep their random stream
+    val r = new scala.util.Random(20261020L)
+    (1 to 6).foreach { round =>
+      // unordered, non-contiguous granule ids; each granule an along range
+      // starting anywhere, with dropped scans (gaps) and dropped footprints
+      val granules = r.shuffle((0 until 500).toList).take(1 + r.nextInt(4))
+      val (c0, nc) = (r.nextInt(6) - 2, 1 + r.nextInt(6))
+      val fp = for {
+        g <- granules
+        a0 = r.nextInt(40)
+        a <- a0 until a0 + 1 + r.nextInt(15)
+        if a == a0 || r.nextInt(5) > 0
+        c <- c0 until c0 + nc
+        if r.nextInt(4) > 0
+        dup <- 0 to (if (r.nextInt(8) == 0) 1 else 0)
+      } yield (Option(s"$g-$a"), Option(c), dup)
+      // rows with no granule, and rows with no cross-track id
+      val extra = Seq.fill(r.nextInt(3))((Option.empty[String], Option(c0), 0)) ++
+        fp.take(r.nextInt(3)).map { case (id, _, _) => (id, Option.empty[Int], 0) }
+      val rows = (fp ++ extra).zipWithIndex.map { case ((id, c, _), rid) => (rid.toLong, id, c) }
+      val df = rows.toDF("rid", "gpm_id", "gpm_cross_track_id").repartition(3)
+
+      // reference: walk the granules in id order, shifting each along block
+      // to start where the previous one ended
+      val parsed = rows.collect { case (rid, Some(id), c) =>
+        val Array(g, a) = id.split("-").map(_.toLong); (rid, g, a, c.map(_.toLong)) }
+      var offset = 0L
+      val shift = parsed.map(_._2).distinct.sorted.map { g =>
+        val as = parsed.filter(_._2 == g).map(_._3)
+        val gShift = offset - as.min
+        offset += as.max - as.min + 1
+        g -> gShift
+      }.toMap
+      val want = parsed.map { case (rid, g, a, c) => rid -> ((a + shift(g), c)) }.toMap
+
+      val got = graft.operators.Analysis.swathIndices(df)
+        .select("rid", "x_index", "y_index").as[(Long, Long, Option[Long])].collect()
+        .map { case (rid, x, y) => rid -> ((x, y)) }.toMap
+      assert(got == want, s"round $round swathIndices")
+
+      // the dense grid: every (x, y) of [0, Σ widths) × [min y, max y] once,
+      // filled by one of the rows indexed there (dropDuplicates keeps any)
+      val ys = parsed.flatMap(_._4)
+      val cells = if (ys.isEmpty) Nil else for (x <- 0L until offset; y <- ys.min to ys.max) yield (x, y)
+      val byCell = want.toSeq.collect { case (rid, (x, Some(y))) => (x, y) -> rid }
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      val grid = graft.operators.Analysis.overpassToGrid(spark, df)
+        .select("x_index", "y_index", "rid").as[(Long, Long, Option[Long])].collect()
+      assert(grid.map(g => (g._1, g._2)).sorted.toSeq == cells, s"round $round grid cells")
+      grid.foreach { case (x, y, rid) =>
+        val cands = byCell.getOrElse((x, y), Set.empty[Long])
+        assert(rid.fold(cands.isEmpty)(cands), s"round $round cell ($x, $y): $rid of $cands")
+      }
+      assert(grid.count(_._3.isDefined) == byCell.size, s"round $round filled cells")
+    }
+  }
 }

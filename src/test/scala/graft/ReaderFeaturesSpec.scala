@@ -240,6 +240,16 @@ class ReaderFeaturesSpec extends AnyFunSuite {
     }
   }
 
+  test("an extension no bucket file has fails a region read as it fails Everything, both flavors") {
+    for (fl <- flavors; q <- Seq(Everything, ByExtent(Extent(-35, 48, -22, 37)),
+                                 ByExtent(Extent(-40, 40, 72, 88)))) {
+      val e = intercept[IllegalArgumentException] {
+        BucketReader.read(spark, granuleBuckets(fl), q, fileExtension = ".nc")
+      }
+      assert(e.getMessage.contains("no files match the filename filters"), s"$fl / $q")
+    }
+  }
+
   test("a glob or regex filter alone takes the files it matches, whatever the extension") {
     for (fl <- flavors) {
       val dir = tmp(s"pq_$fl")
